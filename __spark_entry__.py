@@ -9,12 +9,13 @@ oracle_sql() — DuckDB twins rendered from the same templates.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gluon_ocr_spark import queries as _q  # noqa: E402
 

@@ -4,6 +4,18 @@ Exact, MinHash+LSH, SimHash, and n-gram-Jaccard dedup as composable
 transforms — the same logic as the SQL battery (single source of
 truth: :mod:`gluon_ocr_spark.functions.portable`).
 
+The near-duplicate chain is written once, one function per step, and
+every near-dup caller (:func:`drop_near_dups`,
+:func:`incremental_dedup`, the shingle-minhash query) composes it:
+
+    codes   (:func:`codes_table` — the persisted CollapseProject boundary)
+    → bands (:func:`bands_from_codes` — LSH band table)
+    → bucket pairs (:func:`bucket_pairs` — band-bucket self-join)
+    → verify (:func:`jaccard_verify` — exact token-set Jaccard)
+    → CC    (:func:`connected_components` — large/small-star)
+    → keep  (component-min rows; :func:`_keep_component_min` runs
+             verify → CC → keep over a persisted band table)
+
 Scale notes (the part that matters at 10^12 docs):
 
 * exact dedup is one hash-shuffle with map-side combine;
@@ -17,6 +29,7 @@ Scale notes (the part that matters at 10^12 docs):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import portable as pt
@@ -55,7 +68,7 @@ def drop_near_dups(
 
     Composition of the individually-gated stages:
     minhash bands → candidate pairs (equi-join on (band_id,
-    band_key), :func:`minhash_candidate_pairs`) → exact token-set
+    band_key), :func:`bucket_pairs`) → exact token-set
     Jaccard VERIFICATION of the candidates (:func:`jaccard_verify` —
     LSH band collisions are candidates, not decisions; pruning on
     unverified pairs over-merges boilerplate-heavy corpora) →
@@ -71,12 +84,30 @@ def drop_near_dups(
     already pays. Reference corpus semantics: one clean record per
     source doc (detect_dataset.py:131-150).
     """
-    cand = minhash_candidate_pairs(df, id_col, text_col, materialize=True)
-    pairs = jaccard_verify(df, cand, id_col, text_col, threshold).select("doc_a", "doc_b")
-    # cc_workdir: durable per-round snapshots (object storage at the
-    # lake) so a driver/executor loss mid-CC costs one round, not the
-    # whole prune — the north rule's resumable-from-checkpoint
-    # contract applied to the iterative stage
+    bands = minhash_bands(df, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    return _keep_component_min(df, bands, id_col, text_col, threshold, cc_workdir)
+
+
+def _keep_component_min(
+    df: DataFrame,
+    bands: DataFrame,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    cc_workdir: str | None = None,
+) -> DataFrame:
+    """The chain's tail over ``df``'s already-persisted band table:
+    bucket pairs → Jaccard verify → connected components → keep rows
+    whose id IS the component min (or in no verified pair).
+
+    ``cc_workdir`` gives CC durable per-round snapshots (object
+    storage at the lake) so a driver/executor loss mid-CC costs one
+    round, not the whole prune — the north rule's
+    resumable-from-checkpoint contract applied to the iterative
+    stage."""
+    pairs = jaccard_verify(df, bucket_pairs(bands, id_col), id_col, text_col, threshold).select(
+        "doc_a", "doc_b"
+    )
     if cc_workdir is not None:
         labels = connected_components_resumable(df.sparkSession, pairs, cc_workdir)
     else:
@@ -94,20 +125,41 @@ def drop_near_dups(
     )
 
 
+def codes_table(
+    df: DataFrame,
+    codes_expr: str,
+    id_col: str = "doc_id",
+    extra: tuple[str, ...] = (),
+    persist: bool = True,
+) -> DataFrame:
+    """``(id[, extra…], codes)`` persisted — the CollapseProject
+    boundary under every sketch. ``codes_expr`` is the token-code or
+    shingle-code expression. The sketches reference the codes array
+    many times (16 minhash sigs, 16 simhash bits, one slice per
+    winnow window); without a materialization boundary Catalyst
+    inlines the md5 pass into every reference — measured 6.7× slower
+    for the band table at sf0.1 (6.7 s → 1.0 s). At lake scale this
+    projection is what you'd write/bucket once anyway."""
+    codes = df.select(F.col(id_col), *extra, F.expr(codes_expr).alias("codes"))
+    return codes.persist(StorageLevel.MEMORY_AND_DISK) if persist else codes
+
+
 def minhash_bands(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", materialize_codes: bool = True
 ) -> DataFrame:
-    """(id, band_id, band_key) — LSH banding of minhash signatures.
+    """(id, band_id, band_key) — LSH banding of minhash signatures
+    over the token codes. ``materialize_codes`` persists the codes
+    projection (:func:`codes_table`)."""
+    codes = codes_table(df, pt.token_codes(text_col, SPARK), id_col, persist=materialize_codes)
+    return bands_from_codes(codes, id_col)
+
+
+def bands_from_codes(codes: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, band_id, band_key) from an ``(id, codes)`` frame.
 
     Single corpus scan: all K sigs / band keys computed in one
-    projection and row-exploded via ``inline`` (a UNION-ALL-per-band
-    plan re-scans the corpus once per band — 8× in the self-join).
-
-    ``materialize_codes`` persists the (id, token-codes) projection
-    BEFORE the 16 signature expressions. Without the boundary,
-    Catalyst's CollapseProject inlines the md5 token pass into every
-    signature lambda and the hash pass runs 16× per row — measured
-    6.7× slower at sf0.1 (6.7 s → 1.0 s for the band table).
+    projection and row-exploded (a UNION-ALL-per-band plan re-scans
+    the corpus once per band — 8× in the self-join).
 
     The signature vector is computed in a PROJECT below the band
     explode, and the generator is a constant ``sequence`` — never
@@ -116,11 +168,6 @@ def minhash_bands(
     carries no projection boundary; measured 12× on the analogous
     k-gram explode), while a pass-through child column is computed
     once per input row."""
-    codes = df.select(F.col(id_col), F.expr(pt.token_codes(text_col, SPARK)).alias("codes"))
-    if materialize_codes:
-        from pyspark import StorageLevel
-
-        codes = codes.persist(StorageLevel.MEMORY_AND_DISK)
     n_bands = pt.MINHASH_K // pt.BAND_ROWS
     sigs = ", ".join(pt.minhash_sig_exprs("codes", SPARK))
     sigv = codes.select(F.col(id_col), F.expr(f"array({sigs})").alias("sigv"))
@@ -142,19 +189,21 @@ def minhash_bands(
 
 
 def minhash_candidate_pairs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", materialize: bool = True
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Distinct candidate near-dup pairs via band-bucket equi-join.
 
-    ``materialize`` persists the bands before the self-join so the
-    minhash computation runs once, not once per join side. At lake
-    scale, write bands to a table bucketed by band_key instead and
-    the join becomes shuffle-free."""
-    bands = minhash_bands(df, id_col, text_col)
-    if materialize:
-        from pyspark import StorageLevel
+    The bands persist before the self-join so the minhash computation
+    runs once, not once per join side. At lake scale, write bands to
+    a table bucketed by band_key instead and the join becomes
+    shuffle-free."""
+    bands = minhash_bands(df, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    return bucket_pairs(bands, id_col)
 
-        bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
+
+def bucket_pairs(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Distinct ``(doc_a, doc_b)`` pairs, ``doc_a < doc_b``, sharing a
+    ``(band_id, band_key)`` bucket — the band table's self-join."""
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -189,8 +238,6 @@ def minhash_star_edges(
     :func:`minhash_candidate_pairs` when the pairs themselves are the
     product (e.g. to feed pairwise Jaccard verification); use this
     when only connectivity matters."""
-    from pyspark import StorageLevel
-
     bands = minhash_bands(df, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
     reps = bands.groupBy("band_id", "band_key").agg(F.min(id_col).alias("doc_a"))
     return (
@@ -206,11 +253,7 @@ def simhash_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     before the 16 per-bit sums — same CollapseProject boundary as
     :func:`minhash_bands` (the simhash expression references the
     codes array 16×; inlined, the md5 pass would run 16× per row)."""
-    from pyspark import StorageLevel
-
-    codes = df.select(
-        F.col(id_col), F.expr(pt.token_codes(text_col, SPARK)).alias("codes")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    codes = codes_table(df, pt.token_codes(text_col, SPARK), id_col)
     return (
         codes.select(F.col(id_col), F.expr(pt.simhash16_expr("codes", SPARK)).alias("simhash16"))
         .groupBy("simhash16")
@@ -239,16 +282,6 @@ def _canon_edges(e: DataFrame) -> DataFrame:
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
     )
-
-
-def _edge_checksum(e: DataFrame) -> tuple[int, int]:
-    """(count, bit_xor of xxhash64) — order-independent, overflow-free
-    (ANSI mode: sum(xxhash64) throws on long overflow)."""
-    row = e.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
 
 
 def _is_star_forest(e: DataFrame) -> bool:
@@ -293,7 +326,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iterations: int = 50,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Duplicate-cluster resolution: connected components over a pair
     graph via alternating large-star / small-star (Kiveris et al.,
@@ -331,18 +363,19 @@ def connected_components(
       3-5 in practice for near-clique dup graphs.
     """
     edges = _canon_edges(pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    if checkpoint:
-        edges = edges.localCheckpoint(eager=False)
+    edges = edges.localCheckpoint(eager=False)
 
     for _ in range(max_iterations):
         if _is_star_forest(edges):
             break
-        edges = _star_round(edges)
-        if checkpoint:
-            edges = edges.localCheckpoint(eager=False)
+        edges = _star_round(edges).localCheckpoint(eager=False)
+    return _star_labels(edges)
 
-    # Converged star forest: every non-root points straight at the
-    # component min. Roots are the distinct targets.
+
+def _star_labels(edges: DataFrame) -> DataFrame:
+    """(node, cluster_id) from a converged star forest: every non-root
+    points straight at the component min; roots are the distinct
+    targets."""
     return edges.select(F.col("u").alias("node"), F.col("v").alias("cluster_id")).union(
         edges.select("v", "v").distinct()
     )
@@ -401,10 +434,7 @@ def connected_components_resumable(
         nxt = _star_round(edges)
         nxt.write.mode("overwrite").parquet(round_dir(k))
         edges = spark.read.parquet(round_dir(k))  # durable lineage cut
-
-    return edges.select(F.col("u").alias("node"), F.col("v").alias("cluster_id")).union(
-        edges.select("v", "v").distinct()
-    )
+    return _star_labels(edges)
 
 
 def dedup_clusters(
@@ -446,7 +476,6 @@ def simhash_hamming_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs within Hamming distance ≤ 2 of the 16-bit
     simhash, via band-PAIR mask blocking (the rotate-band family).
@@ -457,26 +486,20 @@ def simhash_hamming_pairs(
     a bucket equi-join with constant 6× key blow-up, never all-pairs,
     verified by exact popcount.
 
-    ``materialize`` persists the (id, simhash) projection so the md5
-    token-hash pass runs ONCE instead of once per join side (the SQL
-    template in queries.py recomputes it; this is the scale form —
-    same rows). At lake scale write the keyed table bucketed by
-    (mask_id, bucket) instead and the join is shuffle-free."""
+    The (id, simhash) projection persists so the md5 token-hash pass
+    runs ONCE instead of once per join side (the SQL template in
+    queries.py recomputes it; this is the scale form — same rows). At
+    lake scale write the keyed table bucketed by (mask_id, bucket)
+    instead and the join is shuffle-free."""
     band = lambda i: 0xF << (4 * i)  # noqa: E731
     masks = [
         (idx, 0xFFFF & ~(band(i) | band(j)))
         for idx, (i, j) in enumerate((i, j) for i in range(4) for j in range(i + 1, 4))
     ]
-    from pyspark import StorageLevel
-
-    # codes boundary: simhash16 references the codes array 16×, so an
-    # un-materialized projection would re-run the md5 pass per bit
-    codes = df.select(
-        F.col(id_col), F.expr(pt.token_codes(text_col, SPARK)).alias("codes")
+    codes = codes_table(df, pt.token_codes(text_col, SPARK), id_col)
+    sh = codes.select(
+        F.col(id_col), F.expr(pt.simhash16_expr("codes", SPARK)).alias("sh")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    sh = codes.select(F.col(id_col), F.expr(pt.simhash16_expr("codes", SPARK)).alias("sh"))
-    if materialize:
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     mask_rows = ", ".join(f"({idx}, {m})" for idx, m in masks)
     keyed = sh.selectExpr(
         id_col, "sh", f"inline(arrays_zip(array({', '.join(str(i) for i, _ in masks)}), "
@@ -530,7 +553,6 @@ def incremental_dedup(
     threshold: float = 0.8,
     base_fps: DataFrame | None = None,
     base_bands: DataFrame | None = None,
-    cc_workdir: str | None = None,
 ) -> DataFrame:
     """Dedups a NEW batch against an EXISTING corpus snapshot — the
     operation a recurring crawl actually runs (VERDICT r4 stretch
@@ -546,8 +568,9 @@ def incremental_dedup(
        (candidate-only join back to the snapshot), and any batch doc
        with a verified base neighbor is dropped — first-arrival wins,
        the snapshot copy stays canonical;
-    4. near in batch  — :func:`drop_near_dups` (candidates → verify →
-       connected components → keep component-min) over the survivors.
+    4. near in batch  — the same tail as :func:`drop_near_dups`
+       (bucket pairs → verify → connected components → keep
+       component-min) over the survivors.
 
     Scale shape at 10^12 base docs + a daily batch: the base is
     touched only through its two stored artifacts (fingerprints,
@@ -565,13 +588,12 @@ def incremental_dedup(
     re-banding the survivors). Returns the admitted batch rows with
     their original columns.
 
-    Persist/cache note: the intermediate frames persisted here (e2,
-    the batch band table, and the frames inside the near-dup prune)
-    stay registered in the session's cache until the caller clears
-    them — call ``spark.catalog.clearCache()`` (or unpersist) after
-    consuming the result when invoking this repeatedly in one
-    session."""
-    from pyspark import StorageLevel
+    Persist/cache note: e2, the batch band table and its stage-4
+    subset are released once connected components has returned (the
+    result then reads only the eager e3 checkpoint and the CC
+    checkpoints). The codes projection persisted inside
+    :func:`minhash_bands` stays registered in the session's cache
+    until the caller clears it."""
     from pyspark.sql import Window
 
     if base_fps is None or base_bands is None:
@@ -633,37 +655,14 @@ def incremental_dedup(
     # Same pattern as prepare_corpus' pre-prune snapshot; on a
     # cluster prefer reliable checkpoint()/an intermediate table.
     e3 = e3.localCheckpoint(eager=True)
-    # stage 4 (near-in-batch) inline instead of drop_near_dups so the
-    # candidate pairs come from the ALREADY-COMPUTED batch band table
-    # filtered to stage-3 survivors — row-identical to re-banding e3,
-    # without a second md5/signature pass over the batch
+    # stage 4 (near-in-batch): the chain's tail over the ALREADY-
+    # COMPUTED batch band table filtered to stage-3 survivors —
+    # row-identical to re-banding e3, without a second md5/signature
+    # pass over the batch
     bands3 = batch_bands.join(e3.select(id_col), id_col, "semi").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    a3, b3 = bands3.alias("a"), bands3.alias("b")
-    cand3 = (
-        a3.join(
-            b3,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
-        .distinct()
-    )
-    pairs = jaccard_verify(e3, cand3, id_col, text_col, threshold).select("doc_a", "doc_b")
-    if cc_workdir is not None:
-        labels = connected_components_resumable(e3.sparkSession, pairs, cc_workdir)
-    else:
-        labels = connected_components(pairs)
-    return (
-        e3.join(
-            labels.withColumnRenamed("node", id_col).withColumnRenamed(
-                "cluster_id", "__cluster"
-            ),
-            id_col,
-            "left",
-        )
-        .where(F.col("__cluster").isNull() | (F.col(id_col) == F.col("__cluster")))
-        .drop("__cluster")
-    )
+    kept = _keep_component_min(e3, bands3, id_col, text_col, threshold)
+    for frame in (bands3, batch_bands, e2):  # dependents first: no recache
+        frame.unpersist()
+    return kept

@@ -127,6 +127,27 @@ def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def quality_gate(
+    df: DataFrame,
+    min_tokens: int = 10,
+    max_tokens: int = 100_000,
+    max_dup_bigram_frac: float = 0.9,
+) -> DataFrame:
+    """The corpus-prep gate: token stats → quality → repetition
+    signals, keeping docs with ``min_tokens <= n_tokens <= max_tokens``,
+    non-empty text, and ``dup_bigram_frac <= max_dup_bigram_frac``
+    (the Gopher-rule repetition gate: boilerplate/spam drops here,
+    before any dedup shuffle sees it). Pure expressions — the filter
+    fuses into the same codegen stage as the signal columns."""
+    docs = with_repetition(with_quality(with_token_stats(df)))
+    return docs.where(
+        (F.col("n_tokens") >= min_tokens)
+        & (F.col("n_tokens") <= max_tokens)
+        & (F.col("n_chars") > 0)
+        & (F.col("dup_bigram_frac") <= max_dup_bigram_frac)
+    )
+
+
 def compress_stats(text: str, level: int = 6) -> tuple[int, int, float]:
     """(raw_bytes, deflate_bytes, ratio) for one document — the
     compression-ratio quality signal (Gopher/CCNet family): highly

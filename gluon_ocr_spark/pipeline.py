@@ -22,13 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators.dedup import drop_exact_dups, drop_near_dups
 from .operators.extract import extract_docs
-from .operators.textstats import (
-    remove_dup_spans,
-    with_fingerprint,
-    with_quality,
-    with_repetition,
-    with_token_stats,
-)
+from .operators.textstats import quality_gate, remove_dup_spans, with_fingerprint
 
 
 def prepare_corpus(
@@ -96,16 +90,7 @@ def prepare_corpus(
         pages_in_count = docs.count()
     else:
         docs = docs.observe(obs_in, F.count(F.lit(1)).alias("n"))
-    docs = with_repetition(with_fingerprint(with_quality(with_token_stats(docs))))
-    qualified = docs.where(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("n_tokens") <= max_tokens)
-        & (F.col("n_chars") > 0)
-        # Gopher-rule repetition gate: boilerplate/spam drops here,
-        # before the dedup shuffle ever sees it (pure expressions —
-        # fused into the same codegen stage as the token gates)
-        & (F.col("dup_bigram_frac") <= max_dup_bigram_frac)
-    )
+    qualified = with_fingerprint(quality_gate(docs, min_tokens, max_tokens, max_dup_bigram_frac))
     deduped = drop_exact_dups(qualified, id_col="url", text_col="text")
     if near_dedup:
         # Transitive near-dup pruning: minhash bands → candidate
@@ -245,14 +230,9 @@ class IncrementalCorpus:
                 "replayed": True,
             }
 
-        docs = with_repetition(with_quality(with_token_stats(
-            extract_docs(pages, num_partitions=num_partitions)
-        )))
-        qualified = docs.where(
-            (F.col("n_tokens") >= min_tokens)
-            & (F.col("n_tokens") <= max_tokens)
-            & (F.col("n_chars") > 0)
-            & (F.col("dup_bigram_frac") <= max_dup_bigram_frac)
+        qualified = quality_gate(
+            extract_docs(pages, num_partitions=num_partitions),
+            min_tokens, max_tokens, max_dup_bigram_frac,
         ).select("url", "text", "n_lines", "n_chars", "n_tokens", "dup_bigram_frac")
         # one materialization of the gated batch: the dedup stages
         # read it repeatedly (same boundary as prepare_corpus)
@@ -264,10 +244,8 @@ class IncrementalCorpus:
         base_bands = self._read_committed(spark, self.bands_dir, committed)
         if base is None:
             # first increment: no snapshot — within-batch dedup only
-            from .operators.dedup import drop_near_dups as _dnd
-
-            admitted = _dnd(drop_exact_dups(qualified, id_col="url", text_col="text"),
-                            id_col="url", text_col="text", threshold=threshold)
+            admitted = drop_near_dups(drop_exact_dups(qualified, id_col="url", text_col="text"),
+                                      id_col="url", text_col="text", threshold=threshold)
         else:
             admitted = incremental_dedup(
                 qualified, base, id_col="url", text_col="text",

@@ -3530,20 +3530,14 @@ def corpus_prep_roundtrip_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.dedup import drop_exact_dups
     from .operators.extract import extract_docs
-    from .operators.textstats import with_quality, with_repetition, with_token_stats
+    from .operators.textstats import quality_gate
     from .sources.pages import wrap_documents, wrap_documents_pdf
 
     docs_tbl = _docs(spark, sf_dir)
     even = wrap_documents(docs_tbl.where(F.col("doc_id") % 2 == 0))
     odd = wrap_documents_pdf(docs_tbl.where(F.col("doc_id") % 2 == 1))
     pages = even.unionByName(odd)
-    docs = with_repetition(with_quality(with_token_stats(extract_docs(pages))))
-    qualified = docs.where(
-        (F.col("n_tokens") >= 10)
-        & (F.col("n_tokens") <= 100_000)
-        & (F.col("n_chars") > 0)
-        & (F.col("dup_bigram_frac") <= 0.9)
-    )
+    qualified = quality_gate(extract_docs(pages))
     deduped = drop_exact_dups(qualified, id_col="url", text_col="text")
     return deduped.select(
         F.split_part(F.col("url"), F.lit("doc://"), F.lit(-1)).cast("bigint").alias("doc_id"),
@@ -3660,20 +3654,14 @@ def corpus_prep_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.dedup import drop_exact_dups, drop_near_dups
     from .operators.extract import extract_docs
-    from .operators.textstats import with_quality, with_repetition, with_token_stats
+    from .operators.textstats import quality_gate
     from .sources.pages import wrap_documents, wrap_documents_pdf
 
     docs_tbl = _docs(spark, sf_dir)
     even = wrap_documents(docs_tbl.where(F.col("doc_id") % 2 == 0))
     odd = wrap_documents_pdf(docs_tbl.where(F.col("doc_id") % 2 == 1))
     pages = even.unionByName(odd)
-    docs = with_repetition(with_quality(with_token_stats(extract_docs(pages))))
-    qualified = docs.where(
-        (F.col("n_tokens") >= 10)
-        & (F.col("n_tokens") <= 100_000)
-        & (F.col("n_chars") > 0)
-        & (F.col("dup_bigram_frac") <= 0.9)
-    )
+    qualified = quality_gate(extract_docs(pages))
     deduped = drop_exact_dups(qualified, id_col="url", text_col="text").select(
         F.split_part(F.col("url"), F.lit("doc://"), F.lit(-1)).cast("bigint").alias("doc_id"),
         "text",
@@ -4154,24 +4142,7 @@ def dedup_minhash_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import minhash_candidate_pairs
 
     docs = _docs(spark, sf_dir)
-    return minhash_candidate_pairs(docs, materialize=True)
-
-
-def _persisted_codes(spark: SparkSession, sf_dir: str, codes_expr: str, extra: tuple = ()):
-    """(doc_id[, extra…], codes) persisted — the CollapseProject
-    boundary: sketch expressions reference the codes array many times
-    (16 simhash bits, 16 minhash sigs, ~W windows), and without a
-    materialization boundary Catalyst inlines the md5 token pass into
-    every reference — measured 6.7× slower for minhash bands at
-    sf0.1. At lake scale this projection is what you'd write/bucket
-    once anyway."""
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-
-    docs = _docs(spark, sf_dir)
-    return docs.select(
-        "doc_id", *extra, F.expr(codes_expr).alias("codes")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    return minhash_candidate_pairs(docs)
 
 
 def text_fingerprint_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4179,7 +4150,9 @@ def text_fingerprint_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 16-bit simhash (16 array references). Same rows as the SQL."""
     from pyspark.sql import functions as F
 
-    c = _persisted_codes(spark, sf_dir, pt.token_codes("text", SPARK), extra=("text",))
+    from .operators.dedup import codes_table
+
+    c = codes_table(_docs(spark, sf_dir), pt.token_codes("text", SPARK), extra=("text",))
     return c.select(
         "doc_id",
         F.md5(F.lower(F.col("text"))).alias("content_fp"),
@@ -4212,41 +4185,13 @@ def dedup_shingle_minhash_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
-    c = _persisted_codes(spark, sf_dir, pt.shingle_codes("text", SPARK))
-    n_bands = pt.MINHASH_K // pt.BAND_ROWS
-    # sig vector below the explode, constant-sequence generator (an
-    # expensive generator expression re-evaluates per generated row —
-    # same fix as operators.dedup.minhash_bands)
-    sigs = ", ".join(pt.minhash_sig_exprs("codes", SPARK))
-    bands = (
-        c.select("doc_id", F.expr(f"array({sigs})").alias("sigv"))
-        .select(
-            "doc_id", "sigv",
-            F.explode(F.expr(f"sequence(0, {n_bands - 1})")).alias("band_id"),
-        )
-        .select(
-            "doc_id",
-            "band_id",
-            F.expr(
-                f"concat_ws('-', transform(slice(sigv, band_id * {pt.BAND_ROWS} + 1, "
-                f"{pt.BAND_ROWS}), x -> cast(x as string)))"
-            ).alias("band_key"),
-        )
-    )
+    from .operators.dedup import bands_from_codes, bucket_pairs, codes_table
+
+    c = codes_table(_docs(spark, sf_dir), pt.shingle_codes("text", SPARK))
     s = c.selectExpr("doc_id", f"{pt.arr_distinct('codes', SPARK)} AS sh").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = bucket_pairs(bands_from_codes(c))
     v = (
         cand.join(s.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
         .join(s.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
@@ -4267,7 +4212,9 @@ def _winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, fingerprint) winnow selection with the codes boundary
     (the sliding-window transform references codes per window; inlined
     it re-runs the md5 pass per window — quadratic in doc length)."""
-    c = _persisted_codes(spark, sf_dir, pt.token_codes("text", SPARK))
+    from .operators.dedup import codes_table
+
+    c = codes_table(_docs(spark, sf_dir), pt.token_codes("text", SPARK))
     w = 4
     # cheap-sequence generator; the window-min computed above the
     # explode (an expensive generator expression re-evaluates per
@@ -4400,7 +4347,7 @@ def dedup_clusters_simhash_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import dedup_clusters, simhash_hamming_pairs
 
     docs = _docs(spark, sf_dir)
-    pairs = simhash_hamming_pairs(docs, materialize=True)
+    pairs = simhash_hamming_pairs(docs)
     return dedup_clusters(docs, pairs)
 
 
@@ -4524,7 +4471,7 @@ def dedup_simhash_hamming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import simhash_hamming_pairs
 
     docs = _docs(spark, sf_dir)
-    return simhash_hamming_pairs(docs, materialize=True)
+    return simhash_hamming_pairs(docs)
 
 
 def dedup_semantic_query(spark: SparkSession, sf_dir: str) -> DataFrame:

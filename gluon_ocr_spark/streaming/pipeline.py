@@ -15,8 +15,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions import portable as pt
+from ..functions.portable import SPARK
 from ..operators.extract import _extract_batches, DOCS_SCHEMA
 from ..sources.pages import PAGES_SCHEMA
+
+N_BANDS = pt.MINHASH_K // pt.BAND_ROWS
 
 
 def read_pages_stream(spark: SparkSession, pages_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
@@ -234,15 +238,10 @@ def corpus_prep_stream(
     stays batch-side (prepare_corpus): connected components need the
     full pair graph; the streaming approximation is
     :func:`near_dedup_stream`."""
-    from ..operators.textstats import with_quality, with_repetition, with_token_stats
+    from ..operators.textstats import quality_gate
 
-    docs = extract_docs_stream_ts(pages)
-    docs = with_repetition(with_quality(with_token_stats(docs)))
-    qualified = docs.where(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("n_tokens") <= max_tokens)
-        & (F.col("n_chars") > 0)
-        & (F.col("dup_bigram_frac") <= max_dup_bigram_frac)
+    qualified = quality_gate(
+        extract_docs_stream_ts(pages), min_tokens, max_tokens, max_dup_bigram_frac
     )
     keyed = qualified.withColumn(
         "content_fp", F.md5(F.lower(F.col("text")))
@@ -297,25 +296,37 @@ def near_dedup_stream(
     matters.
 
     Returns (window_start, id, n_bands) rows for kept docs."""
-    from ..functions import portable as pt
-    from ..functions.portable import SPARK
+    d = docs.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    return _claim_buckets(_band_rows(d, id_col, text_col, ts_col), id_col, ts_col, watermark, window)
 
-    n_bands = pt.MINHASH_K // pt.BAND_ROWS
+
+def _band_rows(docs: DataFrame, id_col: str, text_col: str, ts_col: str) -> DataFrame:
+    """(id, ts, band_id, band_key) — one row per LSH band of each doc.
+    One projection computes all band keys over the token codes and
+    ``inline`` explodes them (the single-scan shape of the batch band
+    table, same keys)."""
     structs = ", ".join(
         f"named_struct('band_id', {band}, 'band_key', {pt.band_key_expr('codes', band, SPARK)})"
-        for band in range(n_bands)
+        for band in range(N_BANDS)
     )
-    d = docs.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    bands = d.selectExpr(
+    return docs.selectExpr(
         id_col, ts_col, f"{pt.token_codes(text_col, SPARK)} AS codes"
     ).selectExpr(id_col, ts_col, f"inline(array({structs}))")
+
+
+def _claim_buckets(
+    bands: DataFrame, id_col: str, ts_col: str, watermark: str, window: str
+) -> DataFrame:
+    """The streaming bucket-claim stage: each ``(band_id, band_key)``
+    bucket keeps its first in-horizon claim, then a tumbling-window
+    count keeps docs that still own all ``N_BANDS`` of their bands."""
     first = bands.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         ["band_id", "band_key"]
     )
     kept = (
         first.groupBy(F.window(F.col(ts_col), window), F.col(id_col))
         .agg(F.count("*").alias("n_bands"))
-        .where(F.col("n_bands") == n_bands)
+        .where(F.col("n_bands") == N_BANDS)
     )
     return kept.select(
         F.col("window.start").alias("window_start"), F.col(id_col), F.col("n_bands")
@@ -336,23 +347,13 @@ def near_dedup_first_owner_batch(
     answer; this mirrors the weaker causal streaming rule)."""
     from pyspark.sql import Window
 
-    from ..functions import portable as pt
-    from ..functions.portable import SPARK
-
-    n_bands = pt.MINHASH_K // pt.BAND_ROWS
-    structs = ", ".join(
-        f"named_struct('band_id', {band}, 'band_key', {pt.band_key_expr('codes', band, SPARK)})"
-        for band in range(n_bands)
-    )
-    bands = docs.selectExpr(
-        id_col, ts_col, f"{pt.token_codes(text_col, SPARK)} AS codes"
-    ).selectExpr(id_col, ts_col, f"inline(array({structs}))")
+    bands = _band_rows(docs, id_col, text_col, ts_col)
     w = Window.partitionBy("band_id", "band_key").orderBy(F.col(ts_col), F.col(id_col))
     owned = bands.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1)
     return (
         owned.groupBy(id_col)
         .agg(F.count("*").alias("n_bands"))
-        .where(F.col("n_bands") == n_bands)
+        .where(F.col("n_bands") == N_BANDS)
         .select(id_col, "n_bands")
     )
 
@@ -393,32 +394,11 @@ def incremental_dedup_stream(
     closes, append the emitted docs' bands to the snapshot table —
     the same artifact handoff as the batch operator's
     ``snapshot_artifacts``."""
-    from ..functions import portable as pt
-    from ..functions.portable import SPARK
-
-    n_bands = pt.MINHASH_K // pt.BAND_ROWS
-    structs = ", ".join(
-        f"named_struct('band_id', {band}, 'band_key', {pt.band_key_expr('codes', band, SPARK)})"
-        for band in range(n_bands)
-    )
     d = docs.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    bands = d.selectExpr(
-        id_col, ts_col, f"{pt.token_codes(text_col, SPARK)} AS codes"
-    ).selectExpr(id_col, ts_col, f"inline(array({structs}))")
-    fresh = bands.join(
+    fresh = _band_rows(d, id_col, text_col, ts_col).join(
         base_bands.select("band_id", "band_key"), ["band_id", "band_key"], "left_anti"
     )
-    first = fresh.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        ["band_id", "band_key"]
-    )
-    kept = (
-        first.groupBy(F.window(F.col(ts_col), window), F.col(id_col))
-        .agg(F.count("*").alias("n_bands"))
-        .where(F.col("n_bands") == n_bands)
-    )
-    return kept.select(
-        F.col("window.start").alias("window_start"), F.col(id_col), F.col("n_bands")
-    )
+    return _claim_buckets(fresh, id_col, ts_col, watermark, window)
 
 
 def incremental_first_owner_batch(
@@ -434,18 +414,7 @@ def incremental_first_owner_batch(
     min-(ts, id) owner of each surviving bucket."""
     from pyspark.sql import Window
 
-    from ..functions import portable as pt
-    from ..functions.portable import SPARK
-
-    n_bands = pt.MINHASH_K // pt.BAND_ROWS
-    structs = ", ".join(
-        f"named_struct('band_id', {band}, 'band_key', {pt.band_key_expr('codes', band, SPARK)})"
-        for band in range(n_bands)
-    )
-    bands = docs.selectExpr(
-        id_col, ts_col, f"{pt.token_codes(text_col, SPARK)} AS codes"
-    ).selectExpr(id_col, ts_col, f"inline(array({structs}))")
-    fresh = bands.join(
+    fresh = _band_rows(docs, id_col, text_col, ts_col).join(
         base_bands.select("band_id", "band_key"), ["band_id", "band_key"], "left_anti"
     )
     w = Window.partitionBy("band_id", "band_key").orderBy(ts_col, id_col)
@@ -453,6 +422,6 @@ def incremental_first_owner_batch(
     return (
         owned.groupBy(id_col)
         .agg(F.count("*").alias("n_owned"))
-        .where(F.col("n_owned") == n_bands)
+        .where(F.col("n_owned") == N_BANDS)
         .select(id_col)
     )

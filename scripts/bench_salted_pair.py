@@ -17,7 +17,11 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, for this process and for the
+# Spark Python workers it starts (they inherit PYTHONPATH, not sys.path)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
 
 import bench  # noqa: E402
 

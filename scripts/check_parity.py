@@ -8,14 +8,22 @@ float), which the driver's value-hash also distinguishes — so passing
 here implies passing there.
 
 Usage: python scripts/check_parity.py [sf_dir] [query ...]
+
+Exits 0 when every checked query matches, 1 on any mismatch, and 2
+(checking nothing) when a named query is not registered.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, for this process and for the
+# Spark Python workers it starts (they inherit PYTHONPATH, not sys.path)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
 
 
 def normalize(v):
@@ -71,6 +79,11 @@ def main():
     vanilla = "--vanilla" in argv
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
     only = set(args[1:])
+    qs = entrymod.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown query names: {unknown}")
+        return 2
 
     if vanilla:
         # rehearse the driver's conditions: stock session, no engine
@@ -84,7 +97,6 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     receipt = {}

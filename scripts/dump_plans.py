@@ -7,9 +7,14 @@ minhash banding, WindowGroupLimit top-k.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, for this process and for the
+# Spark Python workers it starts (they inherit PYTHONPATH, not sys.path)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
 
 HEADER = """# Physical-plan evidence (generated by scripts/dump_plans.py)
 
@@ -60,7 +65,7 @@ def main() -> None:
     lines = [l.rstrip()[:150] for l in plan.splitlines() if l.strip().startswith("(")]
     out.append("## extraction pipeline (salted)\n\n```\n" + "\n".join(lines) + "\n```\n")
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

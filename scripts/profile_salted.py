@@ -18,16 +18,21 @@ Usage: python scripts/profile_salted.py [cores] [pages_path]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, for this process and for the
+# Spark Python workers it starts (they inherit PYTHONPATH, not sys.path)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
 
 
 def main() -> None:
     cores = int(sys.argv[1]) if len(sys.argv) > 1 else 16
     pages_path = (
-        sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.bench_cache/pages_100000"
+        sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, ".bench_cache", "pages_100000")
     )
     from pyspark.sql import functions as F
 

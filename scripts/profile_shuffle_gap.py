@@ -20,10 +20,15 @@ Usage: python scripts/profile_shuffle_gap.py [cores]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, for this process and for the
+# Spark Python workers it starts (they inherit PYTHONPATH, not sys.path)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
 
 SF_DIR = "/root/testdata/sf0.1"
 REPLICATE = 48

@@ -2,8 +2,11 @@
 incl. resume on re-run."""
 
 import json
+import os
 import subprocess
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_cli_synthetic_job_and_resume(tmp_path):
@@ -21,13 +24,13 @@ def test_cli_synthetic_job_and_resume(tmp_path):
         "--partitions",
         "2",
     ]
-    r1 = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo", timeout=300)
+    r1 = subprocess.run(cmd, capture_output=True, text=True, cwd=ROOT, timeout=300)
     assert r1.returncode == 0, r1.stderr[-2000:]
     stats1 = json.loads(r1.stdout.strip().splitlines()[-1])
     assert stats1["urls_processed"] == 30
 
     # second invocation: everything committed → nothing to do
-    r2 = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo", timeout=300)
+    r2 = subprocess.run(cmd, capture_output=True, text=True, cwd=ROOT, timeout=300)
     assert r2.returncode == 0, r2.stderr[-2000:]
     stats2 = json.loads(r2.stdout.strip().splitlines()[-1])
     assert stats2["urls_processed"] == 0
@@ -60,7 +63,7 @@ def test_cli_prep_corpus(tmp_path):
         "--partitions", "2", "--master", "local[4]",
         "--prep-corpus",
     ]
-    r = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo", timeout=600)
+    r = subprocess.run(cmd, capture_output=True, text=True, cwd=ROOT, timeout=600)
     assert r.returncode == 0, r.stderr[-2000:]
     import json as j
 

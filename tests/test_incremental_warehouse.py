@@ -110,3 +110,25 @@ def test_crash_mid_ingest_then_retry(spark, tmp_path):
     # exactly one lineage row for inc2
     lin = spark.read.parquet(wh.lineage_dir)
     assert lin.where("increment_id = 'inc2'").count() == 1
+
+
+def test_incremental_ingest_releases_its_dedup_frames(spark, tmp_path):
+    """Repeated ingests in one session must not pile up cached frames:
+    incremental_dedup releases its batch frames (e2, the batch band
+    table and its stage-4 subset) once connected components has
+    returned. The two entries an incremental ingest still adds are the
+    codes projections persisted inside minhash_bands (the batch band
+    table and the committed-increment band artifact)."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    wh = IncrementalCorpus(str(tmp_path / "wh4"))
+    sizes = []
+    for i in range(4):
+        items = [
+            (f"page://{i}-a", f"{DOC_A} edition {i}"),
+            (f"page://{i}-b", f"{DOC_B} round {i} notes"),
+            (f"page://{i}-c", f"{BOILER} {i}"),
+        ]
+        wh.ingest(spark, _pages(spark, items), f"inc{i}")
+        sizes.append(cache.cachedData().size())
+    growth = [b - a for a, b in zip(sizes, sizes[1:])]
+    assert max(growth) <= 2, sizes
