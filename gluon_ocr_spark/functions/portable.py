@@ -19,6 +19,14 @@ Conventions shared by both dialects:
   ranking is deterministic in both engines (inner-product metric);
 * LSH         = signed random ±1 hyperplanes (seeded literals), bucket
   bits from exact integer dot-product signs.
+
+Spark lambdas: a lambda body never refers to the token-array
+expression (``tokens(...)`` is ``split(lower(text), ' ')``, an
+expression, not a column). Catalyst inlines it into the body, so an
+index lambda such as ``i -> element_at(<split>, i)`` re-splits the
+whole text once per element — quadratic in the doc length. Pair
+neighbours with ``zip_with`` / ``arrays_zip`` over slices of the
+array instead; the lambda then sees only its elements.
 """
 
 from __future__ import annotations
@@ -125,9 +133,11 @@ def shingle_codes(col: str, d: str, n: int = 3) -> str:
     toks = tokens(col, d)
     size = arr_size(toks, d)
     if d == SPARK:
-        gram = f"concat_ws(' ', slice({toks}, i, {n}))"
-        seq = f"sequence(1, {size} - {n - 1})"
-        grams = f"transform({seq}, i -> {hex15(gram, d)} % {P})"
+        # n shifted slices zipped: the k-th field of each struct is
+        # token i+k of the i-th shingle (see the module rule on lambdas)
+        shifted = ", ".join(f"slice({toks}, {k + 1}, {size} - {n - 1})" for k in range(n))
+        gram = "concat_ws(' ', " + ", ".join(f"s['{k}']" for k in range(n)) + ")"
+        grams = f"transform(arrays_zip({shifted}), s -> {hex15(gram, d)} % {P})"
         whole_text = f"concat_ws(' ', {toks})"
         whole = f"array({hex15(whole_text, d)} % {P})"
     else:

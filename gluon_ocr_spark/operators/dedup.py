@@ -154,6 +154,14 @@ def minhash_bands(
     return bands_from_codes(codes, id_col)
 
 
+def release_minhash_codes(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> None:
+    """Drop from the cache the codes projection :func:`minhash_bands`
+    persisted for ``df`` (the cache matches it by plan) — call it once
+    every consumer of the band table has run. Unpersist frames built
+    on the band table before it, so the cache recaches nothing."""
+    codes_table(df, pt.token_codes(text_col, SPARK), id_col, persist=False).unpersist()
+
+
 def bands_from_codes(codes: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, band_id, band_key) from an ``(id, codes)`` frame.
 
@@ -588,12 +596,10 @@ def incremental_dedup(
     re-banding the survivors). Returns the admitted batch rows with
     their original columns.
 
-    Persist/cache note: e2, the batch band table and its stage-4
-    subset are released once connected components has returned (the
-    result then reads only the eager e3 checkpoint and the CC
-    checkpoints). The codes projection persisted inside
-    :func:`minhash_bands` stays registered in the session's cache
-    until the caller clears it."""
+    Persist/cache note: e2, the batch band table, its stage-4 subset
+    and the codes projection under the band table are released once
+    connected components has returned (the result then reads only the
+    eager e3 checkpoint and the CC checkpoints)."""
     from pyspark.sql import Window
 
     if base_fps is None or base_bands is None:
@@ -663,6 +669,8 @@ def incremental_dedup(
         StorageLevel.MEMORY_AND_DISK
     )
     kept = _keep_component_min(e3, bands3, id_col, text_col, threshold)
-    for frame in (bands3, batch_bands, e2):  # dependents first: no recache
-        frame.unpersist()
+    bands3.unpersist()  # dependents first: no recache
+    batch_bands.unpersist()
+    release_minhash_codes(e2, id_col, text_col)
+    e2.unpersist()
     return kept

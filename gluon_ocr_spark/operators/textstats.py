@@ -92,16 +92,27 @@ def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     (The top-2-gram SHARE needs a per-doc mode and lives in the gated
     ``text_repetition`` query; the drop decision at corpus scale uses
-    these shuffle-free columns.)"""
+    these shuffle-free columns.)
+
+    Adjacent tokens are paired by ``zip_with`` over two slices of the
+    token array, so no lambda body refers to the token-array
+    expression (the :mod:`~gluon_ocr_spark.functions.portable` rule):
+    the text is split a fixed number of times per doc and the signals
+    are linear in its length, where an index lambda over
+    ``element_at(<split>, i)`` re-splits it for every token."""
     toks = pt.tokens(text_col, SPARK)
-    bg = (
-        f"CASE WHEN size({toks}) >= 2 THEN transform(sequence(1, size({toks}) - 1), "
-        f"i -> concat(element_at({toks}, i), ' ', element_at({toks}, i + 1))) "
-        "ELSE array() END"
-    )
+
+    def pairs(lam: str) -> str:
+        return (
+            f"zip_with(slice({toks}, 1, size({toks}) - 1), "
+            f"slice({toks}, 2, size({toks}) - 1), {lam})"
+        )
+
+    bigram = "(x, y) -> concat(x, ' ', y)"
+    bg = f"CASE WHEN size({toks}) >= 2 THEN {pairs(bigram)} ELSE array() END"
     reps = (
-        f"CASE WHEN size({toks}) >= 2 THEN size(filter(sequence(1, size({toks}) - 1), "
-        f"i -> element_at({toks}, i) = element_at({toks}, i + 1))) ELSE 0 END"
+        f"CASE WHEN size({toks}) >= 2 THEN size(filter({pairs('(x, y) -> x = y')}, z -> z)) "
+        "ELSE 0 END"
     )
     return (
         df.withColumn("__bg", F.expr(bg))

@@ -214,7 +214,7 @@ class IncrementalCorpus:
     ) -> dict:
         import os
 
-        from .operators.dedup import incremental_dedup, snapshot_artifacts
+        from .operators.dedup import incremental_dedup, release_minhash_codes, snapshot_artifacts
 
         committed = self.committed_ids(spark)  # ONE commit-log read per ingest
         if increment_id in committed:
@@ -260,6 +260,7 @@ class IncrementalCorpus:
         bands.write.mode("overwrite").parquet(
             os.path.join(self.bands_dir, f"increment={increment_id}")
         )
+        release_minhash_codes(written, id_col="url", text_col="text")
         n_admitted = written.count()
         lineage = spark.createDataFrame(
             [(increment_id, n_qualified, n_admitted)],

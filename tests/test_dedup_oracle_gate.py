@@ -1,4 +1,5 @@
-"""Oracle gate for the near-duplicate chain's queries: each must match
+"""Oracle gate for the near-duplicate chain's queries and the queries
+built on the repetition signals and shingle codes: each must match
 its DuckDB twin exactly, checked by ``scripts/check_parity.py`` (the
 repo's type-strict comparator) in a fresh process started OUTSIDE
 the checkout — which also proves the script and its Spark Python
@@ -24,6 +25,17 @@ DEDUP_CHAIN_QUERIES = (
     "dedup_incremental",
 )
 
+# queries built on the quality gate's repetition signals or on the
+# Spark shingle codes (corpus_prep_dedup and dedup_shingle_minhash,
+# above, are both too)
+TOKEN_PAIR_QUERIES = (
+    "corpus_prep_roundtrip",
+    "text_repetition",
+    "text_dup_ngrams",
+    "sketch_kmv_distinct",
+    "corpus_decontaminate",
+)
+
 
 def _check_parity(cwd, *args, timeout):
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -34,14 +46,15 @@ def _check_parity(cwd, *args, timeout):
 
 
 def test_dedup_chain_queries_exact_vs_duckdb(sf_dir, tmp_path):
-    r = _check_parity(str(tmp_path), sf_dir, *DEDUP_CHAIN_QUERIES, timeout=900)
+    names = DEDUP_CHAIN_QUERIES + TOKEN_PAIR_QUERIES
+    r = _check_parity(str(tmp_path), sf_dir, *names, timeout=900)
     assert r.returncode == 0, (r.stdout[-3000:], r.stderr[-2000:])
     exact = {
         line.split()[1].rstrip(":")
         for line in r.stdout.splitlines()
         if line.startswith("ok ") and line.endswith("exact match")
     }
-    assert exact == set(DEDUP_CHAIN_QUERIES), r.stdout[-3000:]
+    assert exact == set(names), r.stdout[-3000:]
 
 
 def test_check_parity_rejects_unknown_query_name(sf_dir, tmp_path):

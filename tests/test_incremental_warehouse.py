@@ -115,10 +115,10 @@ def test_crash_mid_ingest_then_retry(spark, tmp_path):
 def test_incremental_ingest_releases_its_dedup_frames(spark, tmp_path):
     """Repeated ingests in one session must not pile up cached frames:
     incremental_dedup releases its batch frames (e2, the batch band
-    table and its stage-4 subset) once connected components has
-    returned. The two entries an incremental ingest still adds are the
-    codes projections persisted inside minhash_bands (the batch band
-    table and the committed-increment band artifact)."""
+    table, its stage-4 subset and the codes projection under the band
+    table) once connected components has returned, and the ingest
+    releases the codes projection under the committed band artifact
+    once it is written. An incremental ingest adds no cache entry."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     wh = IncrementalCorpus(str(tmp_path / "wh4"))
     sizes = []
@@ -131,4 +131,4 @@ def test_incremental_ingest_releases_its_dedup_frames(spark, tmp_path):
         wh.ingest(spark, _pages(spark, items), f"inc{i}")
         sizes.append(cache.cachedData().size())
     growth = [b - a for a, b in zip(sizes, sizes[1:])]
-    assert max(growth) <= 2, sizes
+    assert max(growth) == 0, sizes
