@@ -11,7 +11,9 @@ every near-dup caller (:func:`drop_near_dups`,
     codes   (:func:`codes_table` — the persisted CollapseProject boundary)
     → bands (:func:`bands_from_codes` — LSH band table)
     → bucket pairs (:func:`bucket_pairs` — band-bucket self-join)
-    → verify (:func:`jaccard_verify` — exact token-set Jaccard)
+    → verify (:func:`verify_sets` — exact set Jaccard of the candidates,
+             over :func:`token_sets` or shingle sets; the token-Jaccard
+             prefix-filter query verifies through it too)
     → CC    (:func:`connected_components` — large/small-star)
     → keep  (component-min rows; :func:`_keep_component_min` runs
              verify → CC → keep over a persisted band table)
@@ -269,18 +271,38 @@ def simhash_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     )
 
 
-def jaccard_verify(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id", text_col: str = "text", threshold: float = 0.8) -> DataFrame:
-    """Verify candidate pairs with exact token-set Jaccard. Joins the
-    (small) pair list back to the corpus twice — both joins are
-    key-equi joins on the id."""
-    ts = df.select(F.col(id_col), F.expr(pt.arr_distinct(pt.tokens(text_col, SPARK), SPARK)).alias("ts"))
+def token_sets(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """``(id, ts)`` — each doc's distinct lowercased tokens, the set
+    :func:`verify_sets` compares."""
+    return df.select(
+        F.col(id_col), F.expr(pt.arr_distinct(pt.tokens(text_col, SPARK), SPARK)).alias("ts")
+    )
+
+
+def verify_sets(
+    pairs: DataFrame, sets_a: DataFrame, sets_b: DataFrame, threshold: float
+) -> DataFrame:
+    """The verify step: exact set Jaccard of the candidate
+    ``(doc_a, doc_b)`` pairs. ``sets_a`` / ``sets_b`` are ``(id, set)``
+    frames joined to ``doc_a`` / ``doc_b`` — key-equi joins on the id,
+    so only candidate docs meet. Returns ``(doc_a, doc_b, jaccard)``
+    for the pairs at or above ``threshold``, jaccard rounded to 4
+    places (the SQL templates' float expression, so thresholding and
+    rounding are bit-identical to the oracles)."""
     j = (
-        pairs.join(ts.withColumnRenamed(id_col, "doc_a").withColumnRenamed("ts", "ts_a"), "doc_a")
-        .join(ts.withColumnRenamed(id_col, "doc_b").withColumnRenamed("ts", "ts_b"), "doc_b")
+        pairs.join(sets_a.toDF("doc_a", "ts_a"), "doc_a")
+        .join(sets_b.toDF("doc_b", "ts_b"), "doc_b")
         .withColumn("inter", F.expr("size(array_intersect(ts_a, ts_b))"))
         .withColumn("jaccard", F.expr("cast(inter as double) / (size(ts_a) + size(ts_b) - inter)"))
     )
     return j.where(F.col("jaccard") >= threshold).select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
+
+
+def jaccard_verify(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id", text_col: str = "text", threshold: float = 0.8) -> DataFrame:
+    """Verify candidate pairs of ``df`` docs with exact token-set
+    Jaccard (:func:`verify_sets` over :func:`token_sets`)."""
+    ts = token_sets(df, id_col, text_col)
+    return verify_sets(pairs, ts, ts, threshold)
 
 
 def _canon_edges(e: DataFrame) -> DataFrame:
@@ -632,22 +654,18 @@ def incremental_dedup(
         )
         .distinct()
     )
-    ts_expr = F.expr(pt.arr_distinct(pt.tokens(text_col, SPARK), SPARK))
-    ts_batch = e2.select(F.col(id_col).alias("doc_a"), ts_expr.alias("ts_a"))
     # candidate-only snapshot fetch: tokenize ONLY the base docs some
     # batch doc collided with (a semi-join by id against the tiny
     # candidate list), never the whole settled corpus
     base_cand = base.join(
         cand.select(F.col("doc_b").alias(id_col)).distinct(), id_col, "semi"
     )
-    ts_base = base_cand.select(F.col(id_col).alias("doc_b"), ts_expr.alias("ts_b"))
     hit = (
-        cand.join(ts_batch, "doc_a")
-        .join(ts_base, "doc_b")
-        .withColumn("inter", F.expr("size(array_intersect(ts_a, ts_b))"))
-        .where(
-            F.expr("cast(inter as double) / (size(ts_a) + size(ts_b) - inter)")
-            >= threshold
+        verify_sets(
+            cand,
+            token_sets(e2, id_col, text_col),
+            token_sets(base_cand, id_col, text_col),
+            threshold,
         )
         .select("doc_a")
         .distinct()

@@ -201,7 +201,11 @@ def with_compress_ratio(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def remove_dup_spans(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 8
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 8,
+    counts_col: str | None = None,
 ) -> DataFrame:
     """Span-level exact-substring dedup as a production transform
     (Lee et al.; the sql_text_dedup_spans template is the gated twin):
@@ -225,18 +229,18 @@ def remove_dup_spans(
     the rebuild keeps the ORIGINAL-case tokens, and docs with zero
     covered spans are never rewritten — their text stays
     byte-identical to the input.
+
+    ``counts_col`` appends the per-doc kept-token count (bigint) from
+    the filtered token array, so a fully-duplicated doc reports 0. The
+    text_dedup_spans query is this operator over lowercased text. Nothing
+    is persisted, so repeated calls leave no cache entry behind.
     """
-    from pyspark.sql import Window, functions as F
-
-    from ..functions import portable as pt
-    from ..functions.portable import SPARK
-
     # k-gram seeds via a CHEAP generator (sequence of positions) with
     # the md5 gram hash computed ABOVE the explode: an expensive
     # expression in the generator position is re-evaluated per
-    # generated row (measured 12× on this exact pass — see
-    # text_dedup_spans_query), while a projection over the generated
-    # position runs once per gram.
+    # generated row (measured 12× on this exact pass; the same note
+    # is on operators.dedup.bands_from_codes), while a projection over
+    # the generated position runs once per gram.
     hexpr = pt.hex15("lower(concat_ws(' ', slice(w, s, %d)))" % k, SPARK)
     toks = df.select(
         F.col(id_col).alias("__id"),
@@ -259,9 +263,9 @@ def remove_dup_spans(
     # range end = last seed + k - 1), and the rebuild as one
     # higher-order filter over the doc's own token array — no
     # covered-position explode, no per-token anti-join shuffle, no
-    # collect_list rebuild (guide §2.3/§2.4; same restructure as
-    # text_dedup_spans_query, proven row-identical by the unchanged
-    # oracle there and the pinned tests here).
+    # collect_list rebuild (guide §2.3/§2.4; text_dedup_spans runs
+    # this operator, so its DuckDB oracle and the pinned tests prove
+    # the fold row-identical to the template's window form).
     merged = (
         grams.join(dup, "gh")
         .groupBy("__id")
@@ -284,19 +288,21 @@ def remove_dup_spans(
             ).alias("__ranges"),
         )
     )
-    return (
-        df.join(merged, F.col(id_col) == F.col("__id"), "left")
-        .withColumn(
-            text_col,
-            F.when(F.col("__ranges").isNull(), F.col(text_col)).otherwise(
-                F.expr(
-                    f"array_join(filter(split({text_col}, ' '), (tok, i) -> "
-                    f"NOT exists(__ranges, r -> i + 1 >= r.rs AND i + 1 <= r.re)), ' ')"
-                )
-            ),
-        )
-        .drop("__id", "__ranges")
+    out = df.join(merged, F.col(id_col) == F.col("__id"), "left").withColumn(
+        "__kept",
+        F.expr(
+            f"filter(split({text_col}, ' '), (tok, i) -> __ranges IS NULL OR "
+            f"NOT exists(__ranges, r -> i + 1 >= r.rs AND i + 1 <= r.re))"
+        ),
     )
+    if counts_col is not None:
+        out = out.withColumn(counts_col, F.size("__kept").cast("bigint"))
+    return out.withColumn(
+        text_col,
+        F.when(F.col("__ranges").isNull(), F.col(text_col)).otherwise(
+            F.array_join("__kept", " ")
+        ),
+    ).drop("__id", "__ranges", "__kept")
 
 
 def train_bpe_on_corpus(

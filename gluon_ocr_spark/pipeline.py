@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .operators.dedup import drop_exact_dups, drop_near_dups
 from .operators.extract import extract_docs
 from .operators.textstats import quality_gate, remove_dup_spans, with_fingerprint
+from .plans.lineage import path_exists, read_commit_log
 
 
 def prepare_corpus(
@@ -171,19 +172,20 @@ class IncrementalCorpus:
         self.lineage_dir = os.path.join(warehouse_dir, "_lineage")
 
     # -- read side ----------------------------------------------------
+    def _committed(self, spark: SparkSession) -> dict:
+        """increment_id → its commit-log row: one read and one collect
+        of the log (:func:`~gluon_ocr_spark.plans.lineage.read_commit_log`:
+        an unreadable log raises instead of reading as an empty warehouse)."""
+        lin = read_commit_log(
+            spark, self.lineage_dir, f"{self.LINEAGE_ROW_SCHEMA}, committed_at timestamp"
+        )
+        if lin is None:
+            return {}
+        return {r["increment_id"]: r for r in lin.collect()}
+
     def committed_ids(self, spark: SparkSession) -> list[str]:
-        """Distinct committed increment ids from the commit log.
-
-        ONLY a missing lineage directory maps to "no commits yet" — a
-        transient read failure on an existing log must raise, not be
-        mistaken for an empty warehouse (which would re-admit
-        snapshot duplicates and double-commit the increment)."""
-        import os
-
-        if not os.path.isdir(self.lineage_dir):
-            return []
-        lin = spark.read.parquet(self.lineage_dir)
-        return [r["increment_id"] for r in lin.select("increment_id").distinct().collect()]
+        """Committed increment ids from the commit log."""
+        return list(self._committed(spark))
 
     def _read_committed(
         self, spark: SparkSession, base_dir: str, ids: list[str]
@@ -191,7 +193,7 @@ class IncrementalCorpus:
         import os
 
         paths = [os.path.join(base_dir, f"increment={i}") for i in ids]
-        paths = [p for p in paths if os.path.isdir(p)]
+        paths = [p for p in paths if path_exists(spark, p)]
         if not paths:
             return None
         return spark.read.parquet(*paths)
@@ -216,13 +218,9 @@ class IncrementalCorpus:
 
         from .operators.dedup import incremental_dedup, release_minhash_codes, snapshot_artifacts
 
-        committed = self.committed_ids(spark)  # ONE commit-log read per ingest
+        committed = self._committed(spark)  # ONE commit-log read per ingest
         if increment_id in committed:
-            lin = (
-                spark.read.parquet(self.lineage_dir)
-                .where(F.col("increment_id") == increment_id)
-                .collect()[0]
-            )
+            lin = committed[increment_id]
             return {
                 "increment_id": increment_id,
                 "qualified": lin["qualified"],
@@ -239,9 +237,10 @@ class IncrementalCorpus:
         qualified = qualified.localCheckpoint(eager=True)
         n_qualified = qualified.count()
 
-        base = self._read_committed(spark, self.docs_dir, committed)
-        base_fps = self._read_committed(spark, self.fps_dir, committed)
-        base_bands = self._read_committed(spark, self.bands_dir, committed)
+        ids = list(committed)
+        base = self._read_committed(spark, self.docs_dir, ids)
+        base_fps = self._read_committed(spark, self.fps_dir, ids)
+        base_bands = self._read_committed(spark, self.bands_dir, ids)
         if base is None:
             # first increment: no snapshot — within-batch dedup only
             admitted = drop_near_dups(drop_exact_dups(qualified, id_col="url", text_col="text"),

@@ -39,6 +39,27 @@ LINEAGE_SCHEMA = (
 )
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists on the Hadoop filesystem Spark reads it
+    with; ``os.path`` answers False for every ``s3://``, ``hdfs://``
+    or ``file:`` URI."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
+
+
+def read_commit_log(spark: SparkSession, log_dir: str, schema: str) -> DataFrame | None:
+    """The commit log under ``log_dir`` read with its declared
+    ``schema``; ``None`` only when the directory does not exist. The
+    schema needs no inference, so a log holding only a crashed first
+    commit's ``_temporary/`` reads as 0 rows. An unreadable log raises:
+    taken for "no commits", every committed input would be processed
+    and committed a second time."""
+    if not path_exists(spark, log_dir):
+        return None
+    return spark.read.schema(schema).parquet(log_dir)
+
+
 class ExtractionJob:
     """Resumable distributed extraction over a pages table."""
 
@@ -50,25 +71,31 @@ class ExtractionJob:
 
     # -- read side --------------------------------------------------
     def lineage(self, spark: SparkSession) -> DataFrame | None:
-        try:
-            return spark.read.parquet(self.lineage_dir)
-        except Exception:
-            return None  # no commits yet
+        return read_commit_log(spark, self.lineage_dir, LINEAGE_SCHEMA)
 
-    def committed_run_ids(self, spark: SparkSession) -> list[str]:
+    def _committed(self, spark: SparkSession) -> dict[str, tuple[int, int]]:
+        """run_id → (urls, lines) summed over the run's lineage rows:
+        one read and one collect of the commit log."""
         lin = self.lineage(spark)
         if lin is None:
-            return []
-        return [r["run_id"] for r in lin.select("run_id").distinct().collect()]
+            return {}
+        rows = lin.groupBy("run_id").agg(
+            F.sum("url_count").alias("n"), F.sum("line_count").alias("l")
+        ).collect()
+        return {r["run_id"]: (r["n"], r["l"]) for r in rows}
+
+    def committed_run_ids(self, spark: SparkSession) -> list[str]:
+        return list(self._committed(spark))
+
+    def _docs_of(self, spark: SparkSession, runs: list[str]) -> DataFrame | None:
+        if not runs:
+            return None
+        return spark.read.parquet(*[os.path.join(self.docs_dir, f"run_id={r}") for r in runs])
 
     def read_docs(self, spark: SparkSession) -> DataFrame | None:
         """Union of committed runs only — orphan (uncommitted) run
         directories are invisible, like uncommitted Iceberg snapshots."""
-        runs = self.committed_run_ids(spark)
-        if not runs:
-            return None
-        paths = [os.path.join(self.docs_dir, f"run_id={r}") for r in runs]
-        return spark.read.parquet(*paths)
+        return self._docs_of(spark, self.committed_run_ids(spark))
 
     def committed_urls(self, spark: SparkSession) -> DataFrame | None:
         docs = self.read_docs(spark)
@@ -82,31 +109,22 @@ class ExtractionJob:
         crash; committed urls are never re-extracted (exactly-once).
         """
         run_id = run_id or uuid.uuid4().hex[:16]
-        if run_id in self.committed_run_ids(spark):
+        committed = self._committed(spark)  # the run's one commit-log read
+        if run_id in committed:
             # Idempotent replay: foreachBatch re-delivers an epoch when
             # the STREAM's commit-log write crashed after OUR commit
-            # (deterministic run_id = epoch). The old behavior
-            # recomputed todo as empty via the anti-join and
-            # overwrote the committed run dir with an empty dataset —
-            # permanent data loss. A committed run_id is final: report
-            # its counters from lineage and touch nothing.
-            lin = (
-                spark.read.parquet(self.lineage_dir)
-                .where(F.col("run_id") == run_id)
-                .agg(
-                    F.coalesce(F.sum("url_count"), F.lit(0)).alias("n"),
-                    F.coalesce(F.sum("line_count"), F.lit(0)).alias("l"),
-                )
-                .collect()[0]
-            )
-            return {"run_id": run_id, "urls_processed": lin["n"], "lines": lin["l"], "replayed": True}
-        done = self.committed_urls(spark)
+            # (deterministic run_id = epoch). A committed run_id is
+            # final — recomputing would overwrite its run dir with an
+            # empty dataset — so report its lineage counters only.
+            n, lines = committed[run_id]
+            return {"run_id": run_id, "urls_processed": n, "lines": lines, "replayed": True}
+        done = self._docs_of(spark, list(committed))
         todo = pages
         if done is not None:
             # resume: anti-join against committed urls. url is the
             # identity key (input_hint); both sides shuffle on it and
             # AQE handles skew.
-            todo = pages.join(done, "url", "left_anti")
+            todo = pages.join(done.select("url"), "url", "left_anti")
 
         docs = extract_docs(todo, num_partitions=self.num_partitions).withColumn(
             "partition_id", F.spark_partition_id()

@@ -1339,8 +1339,11 @@ def sql_text_dedup_spans(d: str) -> str:
     K-gram seeds, so whole runs are removed; runs < K survive —
     documented recall bound).
 
-    Fully relational, both engines: position-carrying K-gram hashes →
-    cross-doc df → duplicated starts → MERGED cover intervals →
+    DuckDB dialect only — this is the oracle text; the registered
+    Spark query is text_dedup_spans_query, which runs
+    operators.textstats.remove_dup_spans.
+
+    Fully relational: position-carrying K-gram hashes → cross-doc df → duplicated starts → MERGED cover intervals →
     covered token indexes (sequence explode over the merged ranges) →
     anti-join against the token-position table → ORDERED
     re-aggregation of the survivors. One shuffle for df, one for the
@@ -1356,40 +1359,16 @@ def sql_text_dedup_spans(d: str) -> str:
     DISTINCT shuffle disappears."""
     toks = pt.tokens("text", d)
     k = 8
-    if d == SPARK:
-        gram = f"concat_ws(' ', slice(w, i, {k}))"
-        starts = (
-            f"CASE WHEN size(w) >= {k} THEN transform(sequence(1, size(w) - {k - 1}), "
-            f"i -> struct(i AS s, {pt.hex15(gram, d)} % {pt.P} AS g)) "
-            f"ELSE array() END"
-        )
-        gpos_body = "SELECT doc_id, es.s AS s, es.g AS gh FROM g LATERAL VIEW explode(gs) ev AS es"
-        cover = "explode(sequence(rs, re))"
-        rebuild = (
-            "array_join(transform(array_sort(collect_list(struct(idx, tok))), "
-            "x -> x.tok), ' ')"
-        )
-        tok_at = "element_at(w, idx)"
-        idx_seq = "explode(sequence(1, size(w)))"
-    else:
-        gram = f"list_aggregate(list_slice(w, i, i + {k - 1}), 'string_agg', ' ')"
-        starts = (
-            f"CASE WHEN len(w) >= {k} THEN list_transform(generate_series(1, len(w) - {k - 1}), "
-            f"i -> {{'s': i, 'g': {pt.hex15(gram, d)} % {pt.P}}}) "
-            f"ELSE [] END"
-        )
-        gpos_body = (
-            "SELECT doc_id, u.s AS s, u.g AS gh "
-            "FROM (SELECT doc_id, unnest(gs) AS u FROM g) xx"
-        )
-        cover = "unnest(generate_series(rs, re))"
-        rebuild = "string_agg(tok, ' ' ORDER BY idx)"
-        tok_at = "w[idx]"
-        idx_seq = "unnest(generate_series(1, len(w)))"
+    gram = f"list_aggregate(list_slice(w, i, i + {k - 1}), 'string_agg', ' ')"
+    starts = (
+        f"CASE WHEN len(w) >= {k} THEN list_transform(generate_series(1, len(w) - {k - 1}), "
+        f"i -> {{'s': i, 'g': {pt.hex15(gram, d)} % {pt.P}}}) "
+        f"ELSE [] END"
+    )
     return f"""
     WITH t AS (SELECT doc_id, {toks} AS w FROM documents),
     g AS (SELECT doc_id, {starts} AS gs FROM t),
-    gpos AS ({gpos_body}),
+    gpos AS (SELECT doc_id, u.s AS s, u.g AS gh FROM (SELECT doc_id, unnest(gs) AS u FROM g) xx),
     dup AS (
         SELECT gh FROM gpos GROUP BY gh HAVING count(DISTINCT doc_id) > 1
     ),
@@ -1414,11 +1393,11 @@ def sql_text_dedup_spans(d: str) -> str:
         GROUP BY doc_id, grp
     ),
     covered AS (
-        SELECT doc_id, {cover} AS idx FROM ranges
+        SELECT doc_id, unnest(generate_series(rs, re)) AS idx FROM ranges
     ),
     tokpos AS (
-        SELECT doc_id, idx, {tok_at} AS tok
-        FROM (SELECT doc_id, w, {idx_seq} AS idx FROM t) x
+        SELECT doc_id, idx, w[idx] AS tok
+        FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS idx FROM t) x
     ),
     kept AS (
         SELECT tp.doc_id, tp.idx, tp.tok
@@ -1431,7 +1410,7 @@ def sql_text_dedup_spans(d: str) -> str:
            coalesce(k2.n_kept, 0) AS n_kept_tokens
     FROM t
     LEFT JOIN (
-        SELECT doc_id, {rebuild} AS cleaned, count(*) AS n_kept
+        SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS cleaned, count(*) AS n_kept
         FROM kept GROUP BY doc_id
     ) k2 ON k2.doc_id = t.doc_id
     """
@@ -1535,31 +1514,17 @@ def sql_dedup_shingle_minhash(d: str) -> str:
 
     This is the form that survives 10^12 docs: candidate generation is
     an equi-join on (band_id, band_key); the O(|set| ) exact Jaccard
-    runs only on candidate pairs. Spark side single-scans (sig
-    vector + constant-sequence band explode); DuckDB oracle uses
-    UNION ALL — identical results."""
+    runs only on candidate pairs. DuckDB dialect only — this is the
+    oracle text (one UNION ALL branch per band); the registered Spark
+    query is dedup_shingle_minhash_query, which composes the
+    operators.dedup chain."""
     codes = pt.shingle_codes("text", d)
     n_bands = pt.MINHASH_K // pt.BAND_ROWS
-    if d == SPARK:
-        # same generator-position fix as sql_dedup_minhash_bands
-        sigs = ", ".join(pt.minhash_sig_exprs("codes", d))
-        bands_sql = (
-            f"SELECT doc_id, band_id, "
-            f"concat_ws('-', transform(slice(sigv, band_id * {pt.BAND_ROWS} + 1, {pt.BAND_ROWS}), "
-            f"x -> cast(x as string))) AS band_key "
-            f"FROM (SELECT doc_id, array({sigs}) AS sigv FROM c) sv "
-            f"LATERAL VIEW explode(sequence(0, {n_bands - 1})) t AS band_id"
-        )
-        inter = "size(array_intersect(sa.sh, sb.sh))"
-        nuniq = "size"
-    else:
-        selects = [
-            f"SELECT doc_id, {band} AS band_id, {pt.band_key_expr('codes', band, d)} AS band_key FROM c"
-            for band in range(n_bands)
-        ]
-        bands_sql = "\nUNION ALL\n".join(selects)
-        inter = "len(list_intersect(sa.sh, sb.sh))"
-        nuniq = "len"
+    selects = [
+        f"SELECT doc_id, {band} AS band_id, {pt.band_key_expr('codes', band, d)} AS band_key FROM c"
+        for band in range(n_bands)
+    ]
+    bands_sql = "\nUNION ALL\n".join(selects)
     dist = pt.arr_distinct("codes", d)
     return f"""
     WITH c AS (SELECT doc_id, {codes} AS codes FROM documents),
@@ -1572,7 +1537,7 @@ def sql_dedup_shingle_minhash(d: str) -> str:
     )
     SELECT doc_a, doc_b, round(cast(inter as double) / (na + nb - inter), 4) AS jaccard
     FROM (
-        SELECT doc_a, doc_b, {inter} AS inter, {nuniq}(sa.sh) AS na, {nuniq}(sb.sh) AS nb
+        SELECT doc_a, doc_b, len(list_intersect(sa.sh, sb.sh)) AS inter, len(sa.sh) AS na, len(sb.sh) AS nb
         FROM cand
         JOIN s sa ON sa.doc_id = cand.doc_a
         JOIN s sb ON sb.doc_id = cand.doc_b
@@ -4183,29 +4148,14 @@ def dedup_shingle_minhash_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys, and both verification join sides — the md5 shingle pass
     runs once instead of ~18× (16 inlined sigs + 2 join sides)."""
     from pyspark import StorageLevel
-    from pyspark.sql import functions as F
 
-    from .operators.dedup import bands_from_codes, bucket_pairs, codes_table
+    from .operators.dedup import bands_from_codes, bucket_pairs, codes_table, verify_sets
 
     c = codes_table(_docs(spark, sf_dir), pt.shingle_codes("text", SPARK))
     s = c.selectExpr("doc_id", f"{pt.arr_distinct('codes', SPARK)} AS sh").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    cand = bucket_pairs(bands_from_codes(c))
-    v = (
-        cand.join(s.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
-        .join(s.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
-        .withColumn("inter", F.expr("size(array_intersect(sh_a, sh_b))"))
-        .withColumn("na", F.expr("size(sh_a)"))
-        .withColumn("nb", F.expr("size(sh_b)"))
-    )
-    return v.where(
-        F.expr("cast(inter as double) / (na + nb - inter)") >= 0.7
-    ).select(
-        "doc_a",
-        "doc_b",
-        F.round(F.expr("cast(inter as double) / (na + nb - inter)"), 4).alias("jaccard"),
-    )
+    return verify_sets(bucket_pairs(bands_from_codes(c)), s, s, 0.7)
 
 
 def _winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4392,7 +4342,7 @@ def text_dup_ngrams_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = _pt.arr_distinct(_pt.shingle_codes("text", SPARK, n=5), SPARK)
     # persist the ARRAY projection and explode from the cache: an
     # expensive expression in the generator position is re-evaluated
-    # per generated row (see text_dedup_spans_query), and the cached
+    # per generated row (see operators.dedup.bands_from_codes), and the cached
     # array form costs one scan of the spread input
     arr = _docs(spark, sf_dir).select(
         "doc_id", F.expr(codes).alias("shs")
@@ -4481,7 +4431,7 @@ def dedup_semantic_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluates the CTE per reference — persist it once. Built in the
     DataFrame API from the SAME df object: a persisted temp view
     referenced from inside a `WITH` body is not cache-substituted on
-    Spark 4.1 (see text_dedup_spans_query). At a lake this
+    Spark 4.1 (plan evidence: PLANS.md, dedup_semantic). At a lake this
     projection is the bucketed-by(cell) table SemDeDup reads.
     Same rows as the template."""
     from pyspark import StorageLevel
@@ -4652,87 +4602,18 @@ def _pack_sequences_frame(
 
 
 def text_dedup_spans_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Operator override of sql_text_dedup_spans: the gpos projection
-    — the expensive position-carrying md5 K-gram pass — is referenced
-    by BOTH the df aggregate and the duplicated-seed join, and the
-    template runs the hash pass twice. Persist it once and derive
-    every downstream frame from the SAME DataFrame object: measured
-    on Spark 4.1, a persisted temp view referenced from inside a SQL
-    ``WITH`` CTE body does NOT get cache-substituted (10.9 s vs 2.6 s
-    for the identical dstart join at sf0.1), so this override stays
-    in the DataFrame API end-to-end. Same rows as the template; the
-    DuckDB oracle keeps the inline CTE."""
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
+    """Operator form of sql_text_dedup_spans: the template keeps its
+    rebuilt text lowercased, so the docs are lowercased first and then
+    run through :func:`~gluon_ocr_spark.operators.textstats.remove_dup_spans`
+    (K=8) — the same shape as text_dedup_spans_sa_query. The DuckDB
+    oracle keeps the template's inline CTEs."""
     from pyspark.sql import functions as F
 
-    k = 8
-    docs = _docs(spark, sf_dir)
-    toks = docs.select("doc_id", F.expr(pt.tokens("text", SPARK)).alias("w"))
-    # gram positions via a CHEAP generator (sequence) with the md5
-    # gram hash computed in the projection ABOVE the explode — an
-    # expensive expression in the generator position is re-evaluated
-    # per generated row (measured 3.6 s vs 0.3 s for this exact pass
-    # at sf0.1/local[32]). Docs shorter than k grams are dropped by
-    # the where() exactly like the former CASE → array() → explode.
-    hexpr = pt.hex15(f"concat_ws(' ', slice(w, s, {k}))", SPARK)
-    gpos = (
-        toks.where(F.expr(f"size(w) >= {k}"))
-        .select("doc_id", "w", F.explode(F.expr(f"sequence(1, size(w) - {k - 1})")).alias("s"))
-        .select("doc_id", "s", F.expr(f"{hexpr} % {pt.P}").alias("gh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    dup = (
-        gpos.groupBy("gh")
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .where(F.col("nd") > 1)
-        .select("gh")
-    )
-    # Per-doc interval merge WITHOUT the window + covered-position
-    # explode + anti-join + collect_list rebuild of the round-5 form
-    # (guide §2.3/§2.4: that chain exploded every covered token
-    # position and re-shuffled ~all token rows twice just to decide
-    # which positions survive). Instead: one groupBy collects each
-    # doc's sorted seed starts (bounded by the doc's gram count), a
-    # fold merges seeds s_i into ranges exactly like the former
-    # lag/cumsum window (same rule: a seed extends the current range
-    # iff s - prev_seed <= k; range end = last seed + k - 1), and the
-    # kept tokens fall out of one higher-order filter over the
-    # already-held token array — no token row ever leaves its doc.
-    seeds = (
-        gpos.join(dup, "gh")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list("s")).alias("ss"))
-    )
-    merged = seeds.select(
-        "doc_id",
-        F.expr(
-            f"""aggregate(
-                 ss,
-                 named_struct('rs', cast(array() as array<int>),
-                              'ls', cast(array() as array<int>)),
-                 (acc, s) -> if(size(acc.ls) = 0 OR s - element_at(acc.ls, -1) > {k},
-                     named_struct('rs', concat(acc.rs, array(s)),
-                                  'ls', concat(acc.ls, array(s))),
-                     named_struct('rs', acc.rs,
-                                  'ls', concat(slice(acc.ls, 1, size(acc.ls) - 1), array(s)))),
-                 acc -> zip_with(acc.rs, acc.ls,
-                                 (a, b) -> named_struct('rs', a, 're', b + {k - 1}))
-               )"""
-        ).alias("ranges"),
-    )
-    kept = toks.join(merged, "doc_id", "left").select(
-        "doc_id",
-        F.expr(
-            "filter(w, (tok, i) -> ranges IS NULL OR "
-            "NOT exists(ranges, r -> i + 1 >= r.rs AND i + 1 <= r.re))"
-        ).alias("kept"),
-    )
-    return kept.select(
-        "doc_id",
-        F.expr("array_join(kept, ' ')").alias("cleaned_text"),
-        F.expr("size(kept)").cast("bigint").alias("n_kept_tokens"),
-    )
+    from .operators.textstats import remove_dup_spans
+
+    docs = _docs(spark, sf_dir).select("doc_id", F.lower(F.col("text")).alias("text"))
+    out = remove_dup_spans(docs, counts_col="n_kept_tokens")
+    return out.select("doc_id", F.col("text").alias("cleaned_text"), "n_kept_tokens")
 
 
 def dedup_token_jaccard_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4764,6 +4645,8 @@ def dedup_token_jaccard_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from .operators.dedup import verify_sets
+
     ts = pt.arr_distinct(pt.tokens("text", SPARK), SPARK)
     docs = _docs(spark, sf_dir)
     s = docs.select(
@@ -4789,31 +4672,12 @@ def dedup_token_jaccard_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (5 * F.col("a.na") >= 4 * F.col("b.na"))
             & (5 * F.col("b.na") >= 4 * F.col("a.na")),
         )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    # exact verify on candidates only — the same float expression as
-    # the template so thresholding and rounding are bit-identical
-    verified = (
-        cand.join(s.select(F.col("doc_id").alias("da"), F.col("ts").alias("tsa")), "da")
-        .join(s.select(F.col("doc_id").alias("db"), F.col("ts").alias("tsb")), "db")
-        .select(
-            F.col("da").alias("doc_a"),
-            F.col("db").alias("doc_b"),
-            F.expr("size(array_intersect(tsa, tsb))").alias("inter"),
-            F.expr("size(tsa)").alias("na"),
-            F.expr("size(tsb)").alias("nb"),
-        )
-        .where("cast(inter as double) / (na + nb - inter) >= 0.8")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr("round(cast(inter as double) / (na + nb - inter), 4)").alias(
-                "jaccard"
-            ),
-        )
-    )
-    return verified
+    # exact verify on candidates only
+    sets = s.select("doc_id", "ts")
+    return verify_sets(cand, sets, sets, 0.8)
 
 
 def corpus_pack_sequences_query(spark: SparkSession, sf_dir: str) -> DataFrame:

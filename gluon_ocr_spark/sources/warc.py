@@ -122,7 +122,7 @@ def _parse_ts(ts: str) -> _dt.datetime:
 def read_warc_stream(spark, path_dir: str, max_files_per_trigger: int = 8):
     """Streaming WARC ingestion: new segment files appearing in
     ``path_dir`` flow through the same record parser into the pages
-    stream (→ extract_docs_stream). Micro-batch size = files per
+    stream (→ operators.extract.extract_docs). Micro-batch size = files per
     trigger, the natural unit since CC ships fixed-size segments."""
     files = (
         spark.readStream.format("binaryFile")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import portable as pt
 from ..functions.portable import SPARK
-from ..operators.extract import _extract_batches, DOCS_SCHEMA
+from ..operators.extract import extract_docs
 from ..sources.pages import PAGES_SCHEMA
 
 N_BANDS = pt.MINHASH_K // pt.BAND_ROWS
@@ -28,11 +28,6 @@ def read_pages_stream(spark: SparkSession, pages_dir: str, max_files_per_trigger
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.parquet(pages_dir)
-
-
-def extract_docs_stream(pages: DataFrame) -> DataFrame:
-    """Streaming extraction: identical kernel, identical output schema."""
-    return pages.select("url", "html").mapInPandas(_extract_batches, schema=DOCS_SCHEMA)
 
 
 def run_extract_stream(
@@ -46,7 +41,7 @@ def run_extract_stream(
 
     ``availableNow`` drains the backlog and stops — the test/bench
     mode; continuous triggers are the production mode."""
-    docs = extract_docs_stream(read_pages_stream(spark, pages_dir))
+    docs = extract_docs(read_pages_stream(spark, pages_dir))
     writer = (
         docs.writeStream.format("parquet")
         .option("path", out_dir)

@@ -1,5 +1,6 @@
-"""Oracle gate for the near-duplicate chain's queries and the queries
-built on the repetition signals and shingle codes: each must match
+"""Oracle gate for the near-duplicate chain's queries, the queries
+built on the repetition signals and shingle codes, and the span-removal
+and set-Jaccard queries routed through their operators: each must match
 its DuckDB twin exactly, checked by ``scripts/check_parity.py`` (the
 repo's type-strict comparator) in a fresh process started OUTSIDE
 the checkout — which also proves the script and its Spark Python
@@ -36,6 +37,14 @@ TOKEN_PAIR_QUERIES = (
     "corpus_decontaminate",
 )
 
+# queries whose Spark side is operators.dedup.verify_sets or
+# operators.textstats.remove_dup_spans (dedup_shingle_minhash and the
+# near-dup chain above run verify_sets too)
+OPERATOR_ROUTED_QUERIES = (
+    "text_dedup_spans",
+    "dedup_token_jaccard",
+)
+
 
 def _check_parity(cwd, *args, timeout):
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -46,7 +55,7 @@ def _check_parity(cwd, *args, timeout):
 
 
 def test_dedup_chain_queries_exact_vs_duckdb(sf_dir, tmp_path):
-    names = DEDUP_CHAIN_QUERIES + TOKEN_PAIR_QUERIES
+    names = DEDUP_CHAIN_QUERIES + TOKEN_PAIR_QUERIES + OPERATOR_ROUTED_QUERIES
     r = _check_parity(str(tmp_path), sf_dir, *names, timeout=900)
     assert r.returncode == 0, (r.stdout[-3000:], r.stderr[-2000:])
     exact = {

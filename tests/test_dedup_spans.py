@@ -87,6 +87,20 @@ class TestRemoveDupSpansOperator:
         assert out[1] == "" and out[2] == ""
         assert out[3] == "something else entirely unrelated"
 
+    def test_counts_col_counts_kept_tokens(self, spark):
+        from gluon_ocr_spark.operators.textstats import remove_dup_spans
+
+        t = "This Entire Document Body Is Duplicated Verbatim Elsewhere OK"
+        other = "Something Else Entirely Unrelated"
+        df = spark.createDataFrame([(1, t), (2, t), (3, other)], "doc_id bigint, text string")
+        out = {
+            r["doc_id"]: (r["text"], r["n_kept"])
+            for r in remove_dup_spans(df, counts_col="n_kept").collect()
+        }
+        # an emptied doc counts 0 kept tokens, not size(split('', ' ')) = 1
+        assert out[1] == ("", 0) and out[2] == ("", 0)
+        assert out[3] == (other, 4)
+
 
 class TestDupRunLengths:
     """Binary-lifting duplicated-run detection: max_dup_run_pow2 is

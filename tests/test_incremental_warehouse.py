@@ -70,6 +70,35 @@ def test_two_increments_replay_and_orphans(spark, tmp_path):
     assert "crashed" not in wh.committed_ids(spark)
 
 
+def test_interrupted_first_commit_does_not_block_ingest(spark, tmp_path):
+    """A driver killed during the first commit leaves ``_lineage/``
+    holding only ``_temporary/0/``: that log has no committed row, so
+    it reads as no commits and the next ingest proceeds."""
+    wh = IncrementalCorpus(str(tmp_path / "wh_tmp"))
+    os.makedirs(os.path.join(wh.lineage_dir, "_temporary", "0"))
+    assert wh.committed_ids(spark) == []
+
+    r = wh.ingest(spark, _pages(spark, [("page://a", DOC_A), ("page://b", DOC_B)]), "inc1")
+    assert (r["qualified"], r["admitted"], r["replayed"]) == (2, 2, False)
+    assert wh.committed_ids(spark) == ["inc1"]
+
+
+def test_increments_chain_through_a_filesystem_uri(spark, tmp_path):
+    """A warehouse given as a URI finds its commit log and its
+    committed increments through the Hadoop filesystem of the path:
+    the second increment is deduplicated against the first and a
+    replay is a no-op, as for a local path."""
+    wh = IncrementalCorpus("file://" + str(tmp_path / "wh_uri"))
+    wh.ingest(spark, _pages(spark, [("page://a", DOC_A), ("page://b", DOC_B)]), "inc1")
+    assert wh.committed_ids(spark) == ["inc1"]
+
+    r2 = wh.ingest(spark, _pages(spark, [("page://a2", DOC_A), ("page://c", BOILER)]), "inc2")
+    assert (r2["qualified"], r2["admitted"], r2["replayed"]) == (2, 1, False)
+    assert wh.ingest(spark, _pages(spark, [("page://x", DOC_A)]), "inc2")["replayed"] is True
+    urls = {r["url"] for r in wh.read_docs(spark).select("url").collect()}
+    assert urls == {"page://a", "page://b", "page://c"}
+
+
 def test_first_increment_dedups_within_batch(spark, tmp_path):
     wh = IncrementalCorpus(str(tmp_path / "wh2"))
     r = wh.ingest(

@@ -3,6 +3,9 @@
 import os
 import shutil
 
+import pytest
+from py4j.protocol import Py4JJavaError
+
 from gluon_ocr_spark.plans.lineage import ExtractionJob
 from gluon_ocr_spark.sources.pages import pages_dataframe
 
@@ -83,3 +86,37 @@ def test_committed_run_replay_is_noop(spark, tmp_path):
     docs = job.read_docs(spark)
     assert docs.count() == 8  # data survived the replay intact
     assert docs.where("text IS NULL").count() == 0
+
+
+def test_unreadable_commit_log_raises_instead_of_reextracting(spark, tmp_path):
+    """A commit log that exists but cannot be read is not "no commits":
+    taken as empty, the run would re-extract every page and append a
+    commit beside the damaged file."""
+    out = str(tmp_path / "out5")
+    job = ExtractionJob(out, num_partitions=2)
+    os.makedirs(job.lineage_dir)
+    with open(os.path.join(job.lineage_dir, "part-00000.parquet"), "wb") as f:
+        f.write(b"this is not a parquet file")
+    pages = pages_dataframe(spark, 4, SEED, partitions=2)
+    unreadable = r"FAILED_READ_FILE.*_lineage/part-00000\.parquet"
+
+    with pytest.raises(Py4JJavaError, match=unreadable):
+        job.lineage(spark).count()
+    with pytest.raises(Py4JJavaError, match=unreadable):
+        job.run(spark, pages, run_id="r1")
+    assert not os.path.exists(os.path.join(job.docs_dir, "run_id=r1"))
+    assert os.listdir(job.lineage_dir) == ["part-00000.parquet"]
+
+
+def test_resume_through_a_filesystem_uri(spark, tmp_path):
+    """The commit log is found through the Hadoop filesystem of its
+    path, so an output given as a URI (``file:``, ``hdfs://``,
+    ``s3://``) resumes like a local path instead of re-extracting
+    every page and committing it a second time."""
+    job = ExtractionJob("file://" + str(tmp_path / "out6"), num_partitions=2)
+    pages = pages_dataframe(spark, 6, SEED, partitions=2)
+
+    assert job.run(spark, pages, run_id="r1")["urls_processed"] == 6
+    assert job.committed_run_ids(spark) == ["r1"]
+    assert job.run(spark, pages, run_id="r2")["urls_processed"] == 0
+    assert job.read_docs(spark).count() == 6

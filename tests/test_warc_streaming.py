@@ -1,9 +1,9 @@
 """Streaming WARC ingestion → extraction, end to end."""
 
 from gluon_ocr_spark.kernels.extract import extract_document
+from gluon_ocr_spark.operators.extract import extract_docs
 from gluon_ocr_spark.sources.pages import make_pages
 from gluon_ocr_spark.sources.warc import read_warc_stream, write_warc
-from gluon_ocr_spark.streaming.pipeline import extract_docs_stream
 
 
 def test_warc_stream_extract(spark, tmp_path):
@@ -13,7 +13,7 @@ def test_warc_stream_extract(spark, tmp_path):
     (wdir / "seg-00.warc.gz").write_bytes(write_warc(pages[:10], compress=True))
     (wdir / "seg-01.warc").write_bytes(write_warc(pages[10:]))
 
-    docs = extract_docs_stream(read_warc_stream(spark, str(wdir)))
+    docs = extract_docs(read_warc_stream(spark, str(wdir)))
     q = (
         docs.writeStream.format("memory")
         .queryName("warc_docs")
