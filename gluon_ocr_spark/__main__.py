@@ -4,7 +4,7 @@ Production invocation (north rule):
 
     spark-submit --py-files gluon_ocr_spark.zip -m gluon_ocr_spark \
         --pages <iceberg-or-parquet-path> --out <warehouse-path> \
-        [--partitions N] [--resume]
+        [--partitions N]
 
 In the sandbox, ``--synthetic N`` generates the seeded corpus instead
 of reading a lake table. The job is always resumable: re-running with

@@ -438,11 +438,13 @@ def connected_components_resumable(
     """
     import os
 
+    from ..plans.lineage import path_exists
+
     def round_dir(k: int) -> str:
         return os.path.join(workdir, f"round={k:04d}")
 
     def complete(k: int) -> bool:
-        return os.path.exists(os.path.join(round_dir(k), "_SUCCESS"))
+        return path_exists(spark, os.path.join(round_dir(k), "_SUCCESS"))
 
     start = -1
     k = 0

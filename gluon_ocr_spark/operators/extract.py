@@ -51,7 +51,9 @@ DOCS_SCHEMA = (
 _COLS = ("url", "text", "n_lines", "n_chars", "starts", "ends", "scores", "tags", "dom_orders")
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame], cfg: ExtractionConfig = DEFAULT_CONFIG) -> Iterator[pd.DataFrame]:
+def _extract_batches(
+    batches: Iterator[pd.DataFrame], cfg: ExtractionConfig = DEFAULT_CONFIG, carry: tuple[str, ...] = ()
+) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         out: dict[str, list] = {k: [] for k in _COLS}
         for url, payload in zip(pdf["url"], pdf["html"]):
@@ -66,33 +68,40 @@ def _extract_batches(batches: Iterator[pd.DataFrame], cfg: ExtractionConfig = DE
             out["scores"].append([ln.score for ln in ls])
             out["tags"].append([ln.tag for ln in ls])
             out["dom_orders"].append([ln.order for ln in ls])
+        for c in carry:
+            out[c] = pdf[c].to_numpy()
         yield pd.DataFrame(out)
 
 
 def extract_docs(
     pages: DataFrame,
     num_partitions: int | None = None,
-    payload_col: str = "html",
+    carry: tuple[str, ...] = (),
     cfg: ExtractionConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """pages(url, …, html, …) → docs(url, text, n_lines, n_chars, span arrays).
+    """pages(url, html, …) → docs(url, text, n_lines, n_chars, span
+    arrays, *carry).
 
-    Column-prunes to (url, html) BEFORE the UDF edge — Catalyst cannot
-    see into the UDF, so the projection must be explicit (SURVEY §4
-    predicate-ordering row). ``cfg`` ships to executors in the UDF
-    closure (the config/weights-broadcast pattern — frozen, tiny,
-    serialized once per task launch).
+    Column-prunes to (url, html, *carry) BEFORE the UDF edge — Catalyst
+    cannot see into the UDF, so the projection must be explicit (SURVEY
+    §4 predicate-ordering row). ``carry`` names input columns passed
+    through unchanged, e.g. the ``warc_ts`` event time a streaming
+    watermark needs downstream; keep them light, they cross the Arrow
+    edge twice. ``cfg`` ships to executors in the UDF closure (the
+    config/weights-broadcast pattern — frozen, tiny, serialized once
+    per task launch).
     """
-    pruned = pages.select("url", F.col(payload_col).alias("html"))
+    pruned = pages.select("url", "html", *carry)
     if num_partitions:
         pruned = salt_partition(pruned, num_partitions)
-    if cfg is DEFAULT_CONFIG:
+    schema = ", ".join([DOCS_SCHEMA, *(f"{c} {pruned.schema[c].dataType.simpleString()}" for c in carry)])
+    if cfg is DEFAULT_CONFIG and not carry:
         fn = _extract_batches
     else:
-        def fn(batches, _cfg=cfg):  # noqa: ANN001 - Spark UDF signature
-            return _extract_batches(batches, _cfg)
+        def fn(batches, _cfg=cfg, _carry=carry):  # noqa: ANN001 - Spark UDF signature
+            return _extract_batches(batches, _cfg, _carry)
 
-    return pruned.mapInPandas(fn, schema=DOCS_SCHEMA)
+    return pruned.mapInPandas(fn, schema=schema)
 
 
 def docs_to_lines(docs: DataFrame) -> DataFrame:

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .operators.dedup import drop_exact_dups, drop_near_dups
 from .operators.extract import extract_docs
 from .operators.textstats import quality_gate, remove_dup_spans, with_fingerprint
-from .plans.lineage import path_exists, read_commit_log
+from .plans.lineage import CommitLog
 
 
 def prepare_corpus(
@@ -137,17 +137,11 @@ class IncrementalCorpus:
     ingestion — the production loop around
     :func:`gluon_ocr_spark.operators.dedup.incremental_dedup`.
 
-    Layout (plain-parquet emulation of Iceberg snapshots, same
-    contract as :mod:`gluon_ocr_spark.plans.lineage`: an increment is
-    COMMITTED only when its row appears in ``_lineage``, which is
-    written last — orphan directories from crashes are invisible to
-    readers and harmlessly re-processed on retry):
-
-    * ``docs/increment=<id>/``  — admitted docs of that increment;
-    * ``fps/increment=<id>/``   — their content fingerprints;
-    * ``bands/increment=<id>/`` — their LSH band rows;
-    * ``_lineage/``             — the commit log (one file per
-      increment; the append is all-or-nothing).
+    An increment commits through
+    :class:`gluon_ocr_spark.plans.lineage.CommitLog` (key
+    ``increment_id``, one log row per increment; its admitted docs,
+    their content fingerprints and their LSH band rows go to
+    ``docs``/``fps``/``bands`` under ``increment=<id>/``).
 
     Each ``ingest`` reads the snapshot ONLY through the committed
     artifact tables (never re-hashing settled docs — at 10^12 docs
@@ -158,49 +152,31 @@ class IncrementalCorpus:
     (idempotent under foreachBatch-style redelivery)."""
 
     #: commit-log row schema BEFORE the committed_at timestamp is
-    #: appended at the commit point (single definition — used by the
-    #: createDataFrame call in ingest)
+    #: appended at the commit point
     LINEAGE_ROW_SCHEMA = "increment_id string, qualified bigint, admitted bigint"
 
     def __init__(self, warehouse_dir: str):
-        import os
-
         self.warehouse_dir = warehouse_dir
-        self.docs_dir = os.path.join(warehouse_dir, "docs")
-        self.fps_dir = os.path.join(warehouse_dir, "fps")
-        self.bands_dir = os.path.join(warehouse_dir, "bands")
-        self.lineage_dir = os.path.join(warehouse_dir, "_lineage")
+        self.commits = CommitLog(
+            warehouse_dir,
+            "increment_id",
+            f"{self.LINEAGE_ROW_SCHEMA}, committed_at timestamp",
+            {"qualified": "qualified", "admitted": "admitted"},
+            part="increment",
+        )
+        self.docs_dir = self.commits.table_dir("docs")
+        self.fps_dir = self.commits.table_dir("fps")
+        self.bands_dir = self.commits.table_dir("bands")
+        self.lineage_dir = self.commits.log_dir
 
     # -- read side ----------------------------------------------------
-    def _committed(self, spark: SparkSession) -> dict:
-        """increment_id → its commit-log row: one read and one collect
-        of the log (:func:`~gluon_ocr_spark.plans.lineage.read_commit_log`:
-        an unreadable log raises instead of reading as an empty warehouse)."""
-        lin = read_commit_log(
-            spark, self.lineage_dir, f"{self.LINEAGE_ROW_SCHEMA}, committed_at timestamp"
-        )
-        if lin is None:
-            return {}
-        return {r["increment_id"]: r for r in lin.collect()}
-
     def committed_ids(self, spark: SparkSession) -> list[str]:
         """Committed increment ids from the commit log."""
-        return list(self._committed(spark))
-
-    def _read_committed(
-        self, spark: SparkSession, base_dir: str, ids: list[str]
-    ) -> DataFrame | None:
-        import os
-
-        paths = [os.path.join(base_dir, f"increment={i}") for i in ids]
-        paths = [p for p in paths if path_exists(spark, p)]
-        if not paths:
-            return None
-        return spark.read.parquet(*paths)
+        return list(self.commits.committed(spark))
 
     def read_docs(self, spark: SparkSession) -> DataFrame | None:
         """Union of committed increments only."""
-        return self._read_committed(spark, self.docs_dir, self.committed_ids(spark))
+        return self.commits.read(spark, "docs", self.commits.committed(spark))
 
     # -- write side ---------------------------------------------------
     def ingest(
@@ -214,62 +190,42 @@ class IncrementalCorpus:
         threshold: float = 0.8,
         num_partitions: int | None = None,
     ) -> dict:
-        import os
+        from pyspark.sql import Observation
 
         from .operators.dedup import incremental_dedup, release_minhash_codes, snapshot_artifacts
 
-        committed = self._committed(spark)  # ONE commit-log read per ingest
-        if increment_id in committed:
-            lin = committed[increment_id]
-            return {
-                "increment_id": increment_id,
-                "qualified": lin["qualified"],
-                "admitted": lin["admitted"],
-                "replayed": True,
-            }
+        def write(committed: dict) -> DataFrame:
+            qualified = quality_gate(
+                extract_docs(pages, num_partitions=num_partitions),
+                min_tokens, max_tokens, max_dup_bigram_frac,
+            ).select("url", "text", "n_lines", "n_chars", "n_tokens", "dup_bigram_frac")
+            # one materialization of the gated batch: the dedup stages
+            # read it repeatedly (same boundary as prepare_corpus)
+            qualified = qualified.localCheckpoint(eager=True)
+            n_qualified = qualified.count()
 
-        qualified = quality_gate(
-            extract_docs(pages, num_partitions=num_partitions),
-            min_tokens, max_tokens, max_dup_bigram_frac,
-        ).select("url", "text", "n_lines", "n_chars", "n_tokens", "dup_bigram_frac")
-        # one materialization of the gated batch: the dedup stages
-        # read it repeatedly (same boundary as prepare_corpus)
-        qualified = qualified.localCheckpoint(eager=True)
-        n_qualified = qualified.count()
+            base, base_fps, base_bands = (self.commits.read(spark, t, committed) for t in ("docs", "fps", "bands"))
+            if base is None:
+                # first increment: no snapshot — within-batch dedup only
+                admitted = drop_near_dups(drop_exact_dups(qualified, id_col="url", text_col="text"),
+                                          id_col="url", text_col="text", threshold=threshold)
+            else:
+                admitted = incremental_dedup(
+                    qualified, base, id_col="url", text_col="text",
+                    threshold=threshold, base_fps=base_fps, base_bands=base_bands,
+                )
 
-        ids = list(committed)
-        base = self._read_committed(spark, self.docs_dir, ids)
-        base_fps = self._read_committed(spark, self.fps_dir, ids)
-        base_bands = self._read_committed(spark, self.bands_dir, ids)
-        if base is None:
-            # first increment: no snapshot — within-batch dedup only
-            admitted = drop_near_dups(drop_exact_dups(qualified, id_col="url", text_col="text"),
-                                      id_col="url", text_col="text", threshold=threshold)
-        else:
-            admitted = incremental_dedup(
-                qualified, base, id_col="url", text_col="text",
-                threshold=threshold, base_fps=base_fps, base_bands=base_bands,
+            # the admitted count rides the docs write (no second action)
+            obs = Observation()
+            inc_docs_dir = self.commits.data_dir("docs", increment_id)
+            admitted.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(inc_docs_dir)
+            written = spark.read.parquet(inc_docs_dir)
+            fps, bands = snapshot_artifacts(written, id_col="url", text_col="text")
+            fps.write.mode("overwrite").parquet(self.commits.data_dir("fps", increment_id))
+            bands.write.mode("overwrite").parquet(self.commits.data_dir("bands", increment_id))
+            release_minhash_codes(written, id_col="url", text_col="text")
+            return spark.createDataFrame(
+                [(increment_id, n_qualified, obs.get["n"])], self.LINEAGE_ROW_SCHEMA
             )
 
-        inc_docs_dir = os.path.join(self.docs_dir, f"increment={increment_id}")
-        admitted.write.mode("overwrite").parquet(inc_docs_dir)
-        written = spark.read.parquet(inc_docs_dir)
-        fps, bands = snapshot_artifacts(written, id_col="url", text_col="text")
-        fps.write.mode("overwrite").parquet(os.path.join(self.fps_dir, f"increment={increment_id}"))
-        bands.write.mode("overwrite").parquet(
-            os.path.join(self.bands_dir, f"increment={increment_id}")
-        )
-        release_minhash_codes(written, id_col="url", text_col="text")
-        n_admitted = written.count()
-        lineage = spark.createDataFrame(
-            [(increment_id, n_qualified, n_admitted)],
-            self.LINEAGE_ROW_SCHEMA,
-        ).withColumn("committed_at", F.current_timestamp())
-        # THE commit point — one file, all-or-nothing append
-        lineage.coalesce(1).write.mode("append").parquet(self.lineage_dir)
-        return {
-            "increment_id": increment_id,
-            "qualified": n_qualified,
-            "admitted": n_admitted,
-            "replayed": False,
-        }
+        return self.commits.run(spark, increment_id, write)

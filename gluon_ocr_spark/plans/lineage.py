@@ -4,20 +4,29 @@ The reference has no fault tolerance (SURVEY §4 "spill/fault" row:
 LMDB batched writes only, ``gluonocr/data/data_utils.py:112-115``);
 this is an engine addition. Semantics emulate Iceberg's
 snapshot-commit on plain parquet so the sandbox needs no extra jars —
-on a real deployment each ``run_id`` directory maps 1:1 onto an
-Iceberg ``append`` snapshot and `_lineage` onto a metadata table:
+on a real deployment each committed id's directory maps 1:1 onto an
+Iceberg ``append`` snapshot and `_lineage` onto a metadata table.
 
-* each run writes docs to an isolated ``docs/run_id=<id>/`` directory
-  (never mutating prior runs);
-* the run is COMMITTED only when its rows appear in the ``_lineage``
-  table — written last, after the docs write has fully succeeded.
-  Readers resolve committed run ids from lineage first, so a crash
-  mid-write leaves an orphan directory that is invisible to readers
-  and harmlessly re-processed on resume;
+The protocol is written once, in :class:`CommitLog`, and two writers
+commit through it: :class:`ExtractionJob` (key ``run_id``, one log row
+per written partition, table ``docs``) and
+:class:`gluon_ocr_spark.pipeline.IncrementalCorpus` (key
+``increment_id``, one log row per increment, tables ``docs``/``fps``/
+``bands``):
+
+* each id writes its data to isolated ``<table>/<part>=<id>/``
+  directories (never mutating another id's);
+* the id is COMMITTED only when its rows appear in the ``_lineage``
+  table — written last, as one file, after the data writes have fully
+  succeeded. Readers resolve committed ids from lineage first, so a
+  crash mid-write leaves an orphan directory that is invisible to
+  readers and harmlessly re-processed on retry;
+* a committed id is final: running it again replays its counters from
+  its log rows and recomputes nothing;
 * resume = left-anti join of the input pages against the committed
   url set, so every url is extracted exactly once across any number
   of crash/retry cycles;
-* lineage rows carry per-partition counters
+* extraction lineage rows carry per-partition counters
   ``(run_id, partition_id, url_count, line_count, char_count,
   min_url, max_url, committed_at)`` — the SURVEY §1.3 lineage schema —
   computed from the data as written (not from the plan), so the
@@ -28,8 +37,9 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections.abc import Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..operators.extract import extract_docs
 
@@ -48,16 +58,79 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
 
 
-def read_commit_log(spark: SparkSession, log_dir: str, schema: str) -> DataFrame | None:
-    """The commit log under ``log_dir`` read with its declared
-    ``schema``; ``None`` only when the directory does not exist. The
-    schema needs no inference, so a log holding only a crashed first
-    commit's ``_temporary/`` reads as 0 rows. An unreadable log raises:
-    taken for "no commits", every committed input would be processed
-    and committed a second time."""
-    if not path_exists(spark, log_dir):
-        return None
-    return spark.read.schema(schema).parquet(log_dir)
+class CommitLog:
+    """The exactly-once commit protocol over the warehouse at ``root``.
+
+    ``key`` is the log column naming the committed id and ``part`` the
+    directory partition its data goes under (default ``key``);
+    ``schema`` is the log's declared schema, ``committed_at timestamp``
+    last; ``sums`` maps each counter column of the log to the name it
+    is reported under. An id's counters are always the sums of its log
+    rows: on replay from the log, on a fresh commit observed on the
+    append itself."""
+
+    def __init__(self, root: str, key: str, schema: str, sums: dict[str, str], part: str | None = None):
+        self.root = root
+        self.key = key
+        self.schema = schema
+        self.sums = sums
+        self.part = part or key
+        self.log_dir = os.path.join(root, "_lineage")
+
+    def table_dir(self, table: str) -> str:
+        return os.path.join(self.root, table)
+
+    def data_dir(self, table: str, id_: str) -> str:
+        return os.path.join(self.root, table, f"{self.part}={id_}")
+
+    def read_log(self, spark: SparkSession) -> DataFrame | None:
+        """The log read with its declared schema; ``None`` only when
+        the directory does not exist. The schema needs no inference, so
+        a log holding only a crashed first commit's ``_temporary/``
+        reads as 0 rows. An unreadable log raises: taken for "no
+        commits", every committed input would be processed and
+        committed a second time."""
+        if not path_exists(spark, self.log_dir):
+            return None
+        return spark.read.schema(self.schema).parquet(self.log_dir)
+
+    def committed(self, spark: SparkSession) -> dict[str, dict]:
+        """id → its counters summed over its log rows: one read of the
+        log and one collect, bounded by ids rather than log rows."""
+        log = self.read_log(spark)
+        if log is None:
+            return {}
+        rows = log.groupBy(self.key).agg(*[F.sum(c).alias(n) for c, n in self.sums.items()]).collect()
+        return {r[self.key]: {n: r[n] for n in self.sums.values()} for r in rows}
+
+    def read(self, spark: SparkSession, table: str, ids: Iterable[str]) -> DataFrame | None:
+        """Union of ``table`` over the committed ``ids`` — orphan
+        (uncommitted) directories are invisible, like uncommitted
+        Iceberg snapshots. A committed id whose directory is gone
+        raises: skipped, it would silently shrink the snapshot."""
+        paths = [self.data_dir(table, i) for i in ids]
+        return spark.read.parquet(*paths) if paths else None
+
+    def run(self, spark: SparkSession, id_: str, write: Callable[[dict], DataFrame]) -> dict:
+        """Commit ``id_`` once. ``write(committed)`` gets the committed
+        ids (the run's one log read), writes ``id_``'s data directories
+        and returns its log rows without ``committed_at``. A committed
+        ``id_`` is final — foreachBatch-style redelivery must not
+        overwrite its directories — so it only reports its counters."""
+        committed = self.committed(spark)
+        if id_ in committed:
+            return {self.key: id_, **committed[id_], "replayed": True}
+        obs = Observation()
+        rows = write(committed).withColumn("committed_at", F.current_timestamp()).observe(
+            obs, *[F.coalesce(F.sum(c), F.lit(0)).alias(n) for c, n in self.sums.items()]
+        )
+        # THE commit point. coalesce(1): one file per id so the append
+        # is all-or-nothing — a multi-file append could crash half-way
+        # and leave a partially-committed id (wrong counters on
+        # replay). Lineage is a few tiny rows per id, so a single file
+        # costs nothing even at 10^5 partitions.
+        rows.coalesce(1).write.mode("append").parquet(self.log_dir)
+        return {self.key: id_, **obs.get, "replayed": False}
 
 
 class ExtractionJob:
@@ -66,36 +139,22 @@ class ExtractionJob:
     def __init__(self, out_dir: str, num_partitions: int | None = None):
         self.out_dir = out_dir
         self.num_partitions = num_partitions
-        self.docs_dir = os.path.join(out_dir, "docs")
-        self.lineage_dir = os.path.join(out_dir, "_lineage")
+        self.commits = CommitLog(
+            out_dir, "run_id", LINEAGE_SCHEMA, {"url_count": "urls_processed", "line_count": "lines"}
+        )
+        self.docs_dir = self.commits.table_dir("docs")
+        self.lineage_dir = self.commits.log_dir
 
     # -- read side --------------------------------------------------
     def lineage(self, spark: SparkSession) -> DataFrame | None:
-        return read_commit_log(spark, self.lineage_dir, LINEAGE_SCHEMA)
-
-    def _committed(self, spark: SparkSession) -> dict[str, tuple[int, int]]:
-        """run_id → (urls, lines) summed over the run's lineage rows:
-        one read and one collect of the commit log."""
-        lin = self.lineage(spark)
-        if lin is None:
-            return {}
-        rows = lin.groupBy("run_id").agg(
-            F.sum("url_count").alias("n"), F.sum("line_count").alias("l")
-        ).collect()
-        return {r["run_id"]: (r["n"], r["l"]) for r in rows}
+        return self.commits.read_log(spark)
 
     def committed_run_ids(self, spark: SparkSession) -> list[str]:
-        return list(self._committed(spark))
-
-    def _docs_of(self, spark: SparkSession, runs: list[str]) -> DataFrame | None:
-        if not runs:
-            return None
-        return spark.read.parquet(*[os.path.join(self.docs_dir, f"run_id={r}") for r in runs])
+        return list(self.commits.committed(spark))
 
     def read_docs(self, spark: SparkSession) -> DataFrame | None:
-        """Union of committed runs only — orphan (uncommitted) run
-        directories are invisible, like uncommitted Iceberg snapshots."""
-        return self._docs_of(spark, self.committed_run_ids(spark))
+        """Union of committed runs only."""
+        return self.commits.read(spark, "docs", self.commits.committed(spark))
 
     def committed_urls(self, spark: SparkSession) -> DataFrame | None:
         docs = self.read_docs(spark)
@@ -105,61 +164,39 @@ class ExtractionJob:
     def run(self, spark: SparkSession, pages: DataFrame, run_id: str | None = None) -> dict:
         """Extract all not-yet-committed pages; commit docs + lineage.
 
-        Returns counters for observability. Safe to re-run after any
-        crash; committed urls are never re-extracted (exactly-once).
+        Returns counters for observability: the sums of the run's
+        lineage rows. Safe to re-run after any crash; committed urls
+        are never re-extracted (exactly-once), and a committed
+        ``run_id`` replays its counters.
         """
         run_id = run_id or uuid.uuid4().hex[:16]
-        committed = self._committed(spark)  # the run's one commit-log read
-        if run_id in committed:
-            # Idempotent replay: foreachBatch re-delivers an epoch when
-            # the STREAM's commit-log write crashed after OUR commit
-            # (deterministic run_id = epoch). A committed run_id is
-            # final — recomputing would overwrite its run dir with an
-            # empty dataset — so report its lineage counters only.
-            n, lines = committed[run_id]
-            return {"run_id": run_id, "urls_processed": n, "lines": lines, "replayed": True}
-        done = self._docs_of(spark, list(committed))
-        todo = pages
-        if done is not None:
-            # resume: anti-join against committed urls. url is the
-            # identity key (input_hint); both sides shuffle on it and
-            # AQE handles skew.
-            todo = pages.join(done.select("url"), "url", "left_anti")
 
-        docs = extract_docs(todo, num_partitions=self.num_partitions).withColumn(
-            "partition_id", F.spark_partition_id()
-        )
-        run_dir = os.path.join(self.docs_dir, f"run_id={run_id}")
-        docs.write.mode("overwrite").parquet(run_dir)
-
-        # lineage from data-as-written (audit what actually committed)
-        written = spark.read.parquet(run_dir)
-        lineage = (
-            written.groupBy("partition_id")
-            .agg(
-                F.count("*").alias("url_count"),
-                F.sum("n_lines").alias("line_count"),
-                F.sum("n_chars").alias("char_count"),
-                F.min("url").alias("min_url"),
-                F.max("url").alias("max_url"),
+        def write(committed: dict) -> DataFrame:
+            done = self.commits.read(spark, "docs", committed)
+            todo = pages
+            if done is not None:
+                # resume: anti-join against committed urls. url is the
+                # identity key (input_hint); both sides shuffle on it
+                # and AQE handles skew.
+                todo = pages.join(done.select("url"), "url", "left_anti")
+            docs = extract_docs(todo, num_partitions=self.num_partitions).withColumn(
+                "partition_id", F.spark_partition_id()
             )
-            .select(
-                F.lit(run_id).alias("run_id"),
-                "partition_id",
-                "url_count",
-                "line_count",
-                "char_count",
-                "min_url",
-                "max_url",
-                F.current_timestamp().alias("committed_at"),
+            run_dir = self.commits.data_dir("docs", run_id)
+            docs.write.mode("overwrite").parquet(run_dir)
+            # lineage from data-as-written (audit what actually committed)
+            return (
+                spark.read.parquet(run_dir)
+                .groupBy("partition_id")
+                .agg(
+                    F.count("*").alias("url_count"),
+                    F.sum("n_lines").alias("line_count"),
+                    F.sum("n_chars").alias("char_count"),
+                    F.min("url").alias("min_url"),
+                    F.max("url").alias("max_url"),
+                )
+                .select(F.lit(run_id).alias("run_id"), "partition_id", "url_count", "line_count",
+                        "char_count", "min_url", "max_url")
             )
-        )
-        # THE commit point. coalesce(1): one file per run so the append
-        # is all-or-nothing — a multi-file append could crash half-way
-        # and leave a partially-committed run (wrong counters on
-        # replay). Lineage is one tiny row per partition, so a single
-        # file costs nothing even at 10^5 partitions.
-        lineage.coalesce(1).write.mode("append").parquet(self.lineage_dir)
 
-        stats = written.agg(F.count("*").alias("n"), F.coalesce(F.sum("n_lines"), F.lit(0)).alias("l")).collect()[0]
-        return {"run_id": run_id, "urls_processed": stats["n"], "lines": stats["l"]}
+        return self.commits.run(spark, run_id, write)

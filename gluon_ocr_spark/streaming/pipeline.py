@@ -184,33 +184,6 @@ def dedup_stream(
     return d.dropDuplicatesWithinWatermark(list(key_cols))
 
 
-def extract_docs_stream_ts(pages: DataFrame) -> DataFrame:
-    """Streaming extraction that CARRIES the event time: stateful
-    downstreams (watermark dedup, windowed aggs) need ``warc_ts`` to
-    survive the Arrow UDF edge; the batch extractor drops it because
-    batch dedup keys on content alone. Same kernel, same
-    partitioning; only the light columns ride along."""
-    import pandas as pd
-
-    schema = "url string, warc_ts timestamp, text string, n_lines int, n_chars int"
-
-    def gen(batches):
-        from ..kernels.extract import extract_document
-
-        for pdf in batches:
-            out = {k: [] for k in ("url", "warc_ts", "text", "n_lines", "n_chars")}
-            for url, ts, payload in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-                res = extract_document(bytes(payload) if payload is not None else b"")
-                out["url"].append(url)
-                out["warc_ts"].append(ts)
-                out["text"].append(res.text)
-                out["n_lines"].append(len(res.lines))
-                out["n_chars"].append(len(res.text))
-            yield pd.DataFrame(out)
-
-    return pages.select("url", "warc_ts", "html").mapInPandas(gen, schema=schema)
-
-
 def corpus_prep_stream(
     pages: DataFrame,
     watermark: str = "1 hour",
@@ -235,8 +208,9 @@ def corpus_prep_stream(
     :func:`near_dedup_stream`."""
     from ..operators.textstats import quality_gate
 
+    # warc_ts rides the Arrow edge: the watermark dedup below needs it
     qualified = quality_gate(
-        extract_docs_stream_ts(pages), min_tokens, max_tokens, max_dup_bigram_frac
+        extract_docs(pages, carry=("warc_ts",)), min_tokens, max_tokens, max_dup_bigram_frac
     )
     keyed = qualified.withColumn(
         "content_fp", F.md5(F.lower(F.col("text")))

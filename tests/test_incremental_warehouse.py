@@ -3,6 +3,10 @@ increment chaining through stored artifacts, replay idempotency,
 orphan invisibility."""
 
 import os
+import shutil
+
+import pytest
+from pyspark.errors import AnalysisException
 
 from gluon_ocr_spark.pipeline import IncrementalCorpus
 from gluon_ocr_spark.sources.pages import wrap_text_as_page
@@ -97,6 +101,20 @@ def test_increments_chain_through_a_filesystem_uri(spark, tmp_path):
     assert wh.ingest(spark, _pages(spark, [("page://x", DOC_A)]), "inc2")["replayed"] is True
     urls = {r["url"] for r in wh.read_docs(spark).select("url").collect()}
     assert urls == {"page://a", "page://b", "page://c"}
+
+
+@pytest.mark.parametrize("table", ["docs", "fps", "bands"])
+def test_missing_committed_increment_dir_raises(spark, tmp_path, table):
+    """A committed increment whose directory is gone raises on the next
+    ingest: skipped, the next increment would be deduplicated against
+    less than was committed and readmit its duplicates."""
+    wh = IncrementalCorpus(str(tmp_path / f"wh_missing_{table}"))
+    wh.ingest(spark, _pages(spark, [("page://a", DOC_A), ("page://b", DOC_B)]), "inc1")
+    shutil.rmtree(os.path.join(wh.warehouse_dir, table, "increment=inc1"))
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        wh.ingest(spark, _pages(spark, [("page://a2", DOC_A), ("page://c", BOILER)]), "inc2")
+    assert wh.committed_ids(spark) == ["inc1"]
 
 
 def test_first_increment_dedups_within_batch(spark, tmp_path):

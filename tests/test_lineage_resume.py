@@ -5,6 +5,7 @@ import shutil
 
 import pytest
 from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 
 from gluon_ocr_spark.plans.lineage import ExtractionJob
 from gluon_ocr_spark.sources.pages import pages_dataframe
@@ -35,6 +36,7 @@ def test_resume_exactly_once(spark, tmp_path):
     # third run: nothing left to do
     third = job.run(spark, pages, run_id="run3")
     assert third["urls_processed"] == 0
+    assert third["lines"] == 0
 
 
 def test_orphan_run_invisible_and_reprocessed(spark, tmp_path):
@@ -59,13 +61,15 @@ def test_lineage_counters_match_docs(spark, tmp_path):
     out = str(tmp_path / "out3")
     job = ExtractionJob(out, num_partitions=2)
     pages = pages_dataframe(spark, 12, SEED, partitions=2)
-    job.run(spark, pages, run_id="r1")
+    res = job.run(spark, pages, run_id="r1")
 
     lin = job.lineage(spark)
     docs = job.read_docs(spark)
     got = lin.groupBy().sum("url_count", "line_count").collect()[0]
     assert got["sum(url_count)"] == 12
     assert got["sum(line_count)"] == sum(r["n_lines"] for r in docs.select("n_lines").collect())
+    # the run reports the sums of the lineage rows it committed
+    assert (res["urls_processed"], res["lines"]) == (got["sum(url_count)"], got["sum(line_count)"])
 
 
 def test_committed_run_replay_is_noop(spark, tmp_path):
@@ -83,9 +87,24 @@ def test_committed_run_replay_is_noop(spark, tmp_path):
     replay = job.run(spark, pages, run_id="epoch-000")
     assert replay.get("replayed") is True
     assert replay["urls_processed"] == 8  # counters from lineage
+    assert (replay["urls_processed"], replay["lines"]) == (first["urls_processed"], first["lines"])
     docs = job.read_docs(spark)
     assert docs.count() == 8  # data survived the replay intact
     assert docs.where("text IS NULL").count() == 0
+
+
+def test_missing_committed_run_dir_raises(spark, tmp_path):
+    """A committed run whose docs directory is gone raises on the next
+    run instead of reading as a smaller snapshot: the lost urls would
+    otherwise be re-extracted under a new run id without a word."""
+    job = ExtractionJob(str(tmp_path / "out8"), num_partitions=2)
+    pages = pages_dataframe(spark, 6, SEED, partitions=2)
+    job.run(spark, pages.limit(3), run_id="r1")
+    shutil.rmtree(os.path.join(job.docs_dir, "run_id=r1"))
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        job.run(spark, pages, run_id="r2")
+    assert job.committed_run_ids(spark) == ["r1"]
 
 
 def test_unreadable_commit_log_raises_instead_of_reextracting(spark, tmp_path):

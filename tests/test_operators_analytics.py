@@ -326,6 +326,27 @@ class TestResumableCC:
         # resumed run added rounds, didn't restart from 0
         assert sorted(os.listdir(workdir))[: len(rounds_after_crash)] == rounds_after_crash
 
+    def test_resume_after_interrupt_through_a_filesystem_uri(self, spark, tmp_path):
+        """A workdir given as a URI finds its completed rounds through the
+        Hadoop filesystem of the path: the restart without pairs resumes
+        from the snapshot instead of reporting none."""
+        import os
+
+        from gluon_ocr_spark.operators.dedup import connected_components_resumable
+
+        local = str(tmp_path / "cc_uri")
+        edges = [(i, i + 1) for i in range(1, 16)]
+        pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
+        connected_components_resumable(spark, pairs, "file://" + local, max_iterations=1).collect()
+        rounds_after_crash = sorted(os.listdir(local))
+
+        labels = {
+            r["node"]: r["cluster_id"]
+            for r in connected_components_resumable(spark, None, "file://" + local).collect()
+        }
+        assert labels == {i: 1 for i in range(1, 17)}
+        assert sorted(os.listdir(local))[: len(rounds_after_crash)] == rounds_after_crash
+
     def test_resume_without_snapshot_or_pairs_raises(self, spark, tmp_path):
         from gluon_ocr_spark.operators.dedup import connected_components_resumable
 
