@@ -702,3 +702,62 @@ def test_scan_ignores_obj_pattern_inside_stream_data():
     doc = PdfDocument(base)
     assert 99 not in doc._offsets or doc._offsets.get(99, 0) < len(base)
     assert "fake 99 0 obj inside" in pdf_extract_text(base)
+
+
+# ---------------------------------------------------------------------------
+# hostile payloads
+# ---------------------------------------------------------------------------
+
+
+def _flate_bomb(prefix: bytes, inflated: int) -> bytes:
+    """``prefix`` then spaces up to ``inflated`` bytes, deflated in 1 MiB
+    chunks so the test never holds the inflated stream itself."""
+    z = zlib.compressobj(9)
+    out = [z.compress(prefix)]
+    chunk = b" " * (1 << 20)
+    for _ in range(inflated >> 20):
+        out.append(z.compress(chunk))
+    out.append(z.flush())
+    return b"".join(out)
+
+
+def _with_flate_page(pages: list, marker: str, stream: bytes) -> bytes:
+    """``encode_pdf(pages)`` with the content stream that shows
+    ``marker`` replaced by the FlateDecode ``stream``."""
+    base = encode_pdf(pages, compress=False)
+    at = base.find(f"({marker})".encode())
+    start = base.rfind(b"stream\n", 0, at) + 7
+    end = base.find(b"\nendstream", at)
+    head = base.rfind(b"<< /Length", 0, start)
+    dict_end = base.find(b">>", head) + 2
+    new_dict = f"<< /Filter /FlateDecode /Length {len(stream)} >>".encode()
+    # xref offsets shift → the documented scan fallback finds the objects
+    return base[:head] + new_dict + base[dict_end:start] + stream + base[end:]
+
+
+def test_flate_bomb_is_capped_and_skips_only_its_page():
+    import time
+
+    from gluon_ocr_spark.kernels.pdf import MAX_DECODED_STREAM_BYTES, PdfStream, decode_stream
+
+    bomb = _flate_bomb(b"BT /F1 10 Tf 72 700 Td (bomb) Tj ET\n", 2 * MAX_DECODED_STREAM_BYTES)
+    assert len(bomb) < 1 << 20
+    with pytest.raises(ValueError):
+        decode_stream(None, PdfStream({"Filter": "FlateDecode"}, bomb))
+
+    t0 = time.perf_counter()
+    two_pages = _with_flate_page([[(72, 700, 12, "kept page")], [(72, 700, 12, "bomb")]], "bomb", bomb)
+    assert pdf_extract_text(two_pages) == "kept page"
+    one_page = _with_flate_page([[(72, 700, 12, "bomb")]], "bomb", bomb)
+    assert pdf_extract_text(one_page) == ""
+    assert time.perf_counter() - t0 < 20
+
+
+def test_flate_under_cap_and_truncated_streams_unchanged():
+    from gluon_ocr_spark.kernels.pdf import PdfStream, decode_stream
+
+    content = b"BT /F1 10 Tf 72 700 Td (small) Tj ET"
+    ok = _with_flate_page([[(72, 700, 12, "small")]], "small", zlib.compress(content))
+    assert pdf_extract_text(ok) == "small"
+    with pytest.raises(zlib.error):
+        decode_stream(None, PdfStream({"Filter": "FlateDecode"}, zlib.compress(content)[:-6]))

@@ -37,7 +37,40 @@ JOB = textwrap.dedent(
     from gluon_ocr_spark.operators.kernel_queries import kernel_queries
     boxes = kernel_queries()["kernel_dbnet_boxes"](spark, "").count()
 
-    print("RESULT" + json.dumps({{"docs": n, "boxes": boxes}}))
+    # a worker that has imported the engine from the zip re-reads no zip
+    # on sys.path (the zip itself included) at its next task's start-up
+    def reads_at_task_start(batches):
+        import importlib, zipimport
+        import pandas as pd
+        import gluon_ocr_spark
+
+        importlib.invalidate_caches()
+        calls = []
+        original = zipimport._read_directory
+
+        def counted(archive):
+            calls.append(archive)
+            return original(archive)
+
+        zipimport._read_directory = counted
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = original
+        for _ in batches:
+            pass
+        yield pd.DataFrame({{"file": [gluon_ocr_spark.__file__], "reads": [len(calls)]}})
+
+    worker = spark.range(0, 2, numPartitions=2).mapInPandas(
+        reads_at_task_start, "file string, reads long"
+    ).collect()
+
+    print("RESULT" + json.dumps({{
+        "docs": n,
+        "boxes": boxes,
+        "worker_files": [r.file for r in worker],
+        "worker_reads": [r.reads for r in worker],
+    }}))
     spark.stop()
     """
 )
@@ -75,3 +108,5 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     res = json.loads(line[6:])
     assert res["docs"] == 60
     assert res["boxes"] > 0
+    assert all("gluon_ocr_spark.zip" in f for f in res["worker_files"]), res
+    assert res["worker_reads"] == [0, 0], res
