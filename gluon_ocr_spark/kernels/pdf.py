@@ -39,6 +39,16 @@ Scope (documented, tested):
   font size (else joined directly). TJ kerning moves the pen, so a
   kern wide enough to look like a space *is* a space under the same
   gap rule — one rule, no special cases.
+* **Bulk text path, same bytes**: literal strings copy each run of
+  plain bytes as one slice, simple fonts decode through a
+  ``str.translate`` table, and operators, numbers and names take one
+  regex match each; every one returns exactly what the byte-at-a-time
+  reading returns (``tests/test_pdf_fast_paths.py`` compares them).
+  **Float rule**: a pen advance is the per-glyph terms
+  ``(w / 1000 × size + Tc [+ Tw]) × Th`` folded left to right from
+  ``0.0`` with ``functools.reduce(operator.add, …, 0.0)``. Never the
+  builtin ``sum``: from Python 3.12 it compensates its rounding, moves
+  ``x_end`` by an ulp and with it the gap rule's spaces.
 
 The deterministic :func:`encode_pdf` writer exists for fixtures and
 oracles only (same pattern as :mod:`.jpeg` / :mod:`.gif`): lossless
@@ -48,8 +58,11 @@ text round-trip through a real PDF byte stream is the oracle.
 from __future__ import annotations
 
 import re
+import struct
 import zlib
 from dataclasses import dataclass, field
+from functools import reduce
+from operator import add
 
 # ---------------------------------------------------------------------------
 # object model
@@ -82,14 +95,35 @@ class PdfStream:
 # ---------------------------------------------------------------------------
 
 _NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
+_LITERAL_STOP = re.compile(rb"[()\\\r]")
+_OCTAL = re.compile(rb"[0-7]{1,3}")
+_ESCAPES = {0x6E: 10, 0x72: 13, 0x74: 9, 0x62: 8, 0x66: 12}  # \n \r \t \b \f
+
+# One token after optional whitespace, in one match: a float, an int
+# that cannot start an ``N G R`` reference (no ``<gen> R`` and no
+# comment after it), a name without ``#`` escapes, or a keyword. Every
+# other object, and every int that may start a reference, goes through
+# _Parser._parse_object.
+_WS_RX = re.escape(_WS)
+_END_RX = re.escape(_WS + _DELIM)  # where a token stops
+_REF_TAIL = rb"[" + _WS_RX + rb"]*(?:%|(?:\+?\d+|-0+)(?![\d.])[" + _WS_RX + rb"]*R(?:[" + _END_RX + rb"]|\Z))"
+_TOKEN = re.compile(
+    rb"[" + _WS_RX + rb"]*(?:"
+    rb"([+-]?(?:\d+\.\d*|\.\d+))"
+    rb"|([+-]?\d+)(?![\d.])(?!" + _REF_TAIL + rb")"
+    rb"|/([^" + _END_RX + rb"#]*)(?=[" + _END_RX + rb"]|\Z)"
+    rb"|([^" + _END_RX + rb"+\-.0-9][^" + _END_RX + rb"]*))"
+)
+_FLOAT, _INT, _NAME, _KEYWORD = 1, 2, 3, 4
+_CONSTANTS = {"true": True, "false": False, "null": None}
 
 
 class _Parser:
     """Recursive-descent parser over the raw byte buffer.
 
     One instance parses both body objects and content streams; content
-    operators surface as ``Name``-less bare keyword strings via
-    :meth:`next_token_or_op`.
+    operators surface as bare keyword strings (``str``, not ``Name``)
+    from :meth:`parse_object`.
     """
 
     __slots__ = ("buf", "pos", "n")
@@ -125,6 +159,24 @@ class _Parser:
     # -- objects ------------------------------------------------------------
 
     def parse_object(self):
+        """The next object. The tokens of :data:`_TOKEN` take one regex
+        match; they give the same object, the same ``pos`` and the same
+        errors as :meth:`_parse_object`, which parses everything else."""
+        m = _TOKEN.match(self.buf, self.pos)
+        if m is None:
+            return self._parse_object()
+        self.pos = m.end()
+        kind = m.lastindex
+        if kind == _KEYWORD:
+            kw = m.group(_KEYWORD).decode("latin-1")
+            return _CONSTANTS[kw] if kw in _CONSTANTS else kw
+        if kind == _INT:
+            return int(m.group(_INT))
+        if kind == _FLOAT:
+            return float(m.group(_FLOAT))
+        return Name(m.group(_NAME).decode("latin-1"))
+
+    def _parse_object(self):
         self.skip_ws()
         if self.pos >= self.n:
             raise ValueError("pdf: unexpected EOF")
@@ -143,15 +195,10 @@ class _Parser:
         if c in b"+-.0123456789":
             return self._parse_number_or_ref()
         kw = self._keyword()
-        if kw == "true":
-            return True
-        if kw == "false":
-            return False
-        if kw == "null":
-            return None
         if not kw:
             raise ValueError(f"pdf: bad token at {self.pos}")
-        return kw  # bare keyword (content-stream operator / obj / endobj)
+        # bare keyword (content-stream operator / obj / endobj) or constant
+        return _CONSTANTS[kw] if kw in _CONSTANTS else kw
 
     def _parse_name(self) -> Name:
         self.pos += 1
@@ -173,55 +220,53 @@ class _Parser:
         return Name(out.decode("latin-1"))
 
     def _parse_literal_string(self) -> bytes:
+        """Copies each run of plain bytes as one slice, stopping only at
+        ``(``, ``)``, backslash and CR. An unterminated string raises
+        with ``pos`` at the end of the buffer."""
         buf, n = self.buf, self.n
-        self.pos += 1
+        pos = self.pos + 1
         depth = 1
         out = bytearray()
-        while self.pos < n:
-            c = buf[self.pos]
+        stop = _LITERAL_STOP.search
+        while (m := stop(buf, pos)) is not None:
+            at = m.start()
+            out += buf[pos:at]
+            c = buf[at]
+            pos = at + 1
             if c == 0x5C:  # backslash
-                self.pos += 1
-                if self.pos >= n:
+                if pos >= n:
                     break
-                e = buf[self.pos]
-                if e in b"nrtbf":
-                    out.append({0x6E: 10, 0x72: 13, 0x74: 9, 0x62: 8, 0x66: 12}[e])
-                    self.pos += 1
+                e = buf[pos]
+                if e in _ESCAPES:
+                    out.append(_ESCAPES[e])
+                    pos += 1
                 elif e in b"01234567":  # octal, 1-3 digits
-                    val = 0
-                    k = 0
-                    while k < 3 and self.pos < n and buf[self.pos] in b"01234567":
-                        val = val * 8 + (buf[self.pos] - 0x30)
-                        self.pos += 1
-                        k += 1
-                    out.append(val & 0xFF)
+                    digits = _OCTAL.match(buf, pos)
+                    out.append(int(digits.group(), 8) & 0xFF)
+                    pos = digits.end()
                 elif e == 0x0D:  # line continuation \CR[LF]
-                    self.pos += 1
-                    if self.pos < n and buf[self.pos] == 0x0A:
-                        self.pos += 1
+                    pos += 1
+                    if pos < n and buf[pos] == 0x0A:
+                        pos += 1
                 elif e == 0x0A:
-                    self.pos += 1
+                    pos += 1
                 else:  # \( \) \\ and anything else: literal next char
                     out.append(e)
-                    self.pos += 1
+                    pos += 1
             elif c == 0x28:
                 depth += 1
                 out.append(c)
-                self.pos += 1
             elif c == 0x29:
                 depth -= 1
-                self.pos += 1
                 if depth == 0:
+                    self.pos = pos
                     return bytes(out)
                 out.append(c)
-            elif c == 0x0D:  # CR or CRLF → LF per spec
+            else:  # CR or CRLF → LF per spec
                 out.append(0x0A)
-                self.pos += 1
-                if self.pos < n and buf[self.pos] == 0x0A:
-                    self.pos += 1
-            else:
-                out.append(c)
-                self.pos += 1
+                if pos < n and buf[pos] == 0x0A:
+                    pos += 1
+        self.pos = n
         raise ValueError("pdf: unterminated string")
 
     def _parse_hex_string(self) -> bytes:
@@ -309,13 +354,31 @@ class _Parser:
 # ---------------------------------------------------------------------------
 
 
+# Output cap per stream for every filter that can expand its input:
+# deflate inflates up to ~1000:1 (a 292 KB stream cost a worker ~0.6 GB
+# of RSS), LZW ~2700:1, RunLength 64:1, and the PNG predictor pads each
+# row to /Columns, so one byte could ask for a gigabyte. Past the cap a
+# filter raises ValueError and only the page (or, for an xref or object
+# stream, the document) that needs the stream is lost. 64 MiB still
+# holds a 4k x 5k RGB image or any real content stream.
+MAX_DECODED_STREAM_BYTES = 64 << 20
+
+
+def _too_big(name: str) -> ValueError:
+    return ValueError(f"pdf: {name} stream decodes past {MAX_DECODED_STREAM_BYTES} bytes")
+
+
 def _png_unpredict(data: bytes, columns: int, colors: int, bpc: int) -> bytes:
     rowlen = (columns * colors * bpc + 7) // 8
     bpp = max(1, (colors * bpc + 7) // 8)
+    n = len(data)
+    # every row of 1 + rowlen input bytes (the last one zero-padded)
+    # decodes to rowlen bytes
+    if rowlen > 0 and -(-n // (1 + rowlen)) * rowlen > MAX_DECODED_STREAM_BYTES:
+        raise _too_big("PNG-predicted")
     out = bytearray()
     prev = bytes(rowlen)
     pos = 0
-    n = len(data)
     while pos + 1 <= n and pos < n:
         ft = data[pos]
         row = bytearray(data[pos + 1 : pos + 1 + rowlen])
@@ -409,6 +472,8 @@ def _rle_decode(data: bytes) -> bytes:
                 raise ValueError("pdf: truncated RLE run")
             out += bytes([data[pos]]) * (257 - ln)
             pos += 1
+        if len(out) > MAX_DECODED_STREAM_BYTES:
+            raise _too_big("RunLengthDecode")
     return bytes(out)
 
 
@@ -448,16 +513,12 @@ def _lzw_decode(data: bytes, early_change: int = 1) -> bytes:
             else:
                 raise ValueError("pdf: LZW code out of range")
             out += entry
+            if len(out) > MAX_DECODED_STREAM_BYTES:
+                raise _too_big("LZWDecode")
             prev = entry
             if len(table) + early_change >= (1 << width) and width < 12:
                 width += 1
     return bytes(out)
-
-
-# FlateDecode output cap per stream: deflate inflates up to ~1000:1, so
-# without it a 292 KB stream costs a worker ~0.6 GB of RSS. 64 MiB still
-# holds a 4k x 5k RGB image or any real content stream.
-MAX_DECODED_STREAM_BYTES = 64 << 20
 
 
 def _flate_decode(data: bytes) -> bytes:
@@ -467,7 +528,7 @@ def _flate_decode(data: bytes) -> bytes:
     d = zlib.decompressobj()
     out = d.decompress(data, MAX_DECODED_STREAM_BYTES)
     if d.unconsumed_tail:
-        raise ValueError(f"pdf: FlateDecode stream inflates past {MAX_DECODED_STREAM_BYTES} bytes")
+        raise _too_big("FlateDecode")
     if not d.eof:
         raise zlib.error("incomplete or truncated stream")
     return out
@@ -475,7 +536,7 @@ def _flate_decode(data: bytes) -> bytes:
 
 def decode_stream(doc: "PdfDocument | None", stream: PdfStream) -> bytes:
     """Apply the stream's filter chain; raises ValueError on unsupported
-    filters and on a FlateDecode stream past the output cap."""
+    filters and on output past :data:`MAX_DECODED_STREAM_BYTES`."""
     d = stream.dict
     resolve = doc.resolve if doc is not None else (lambda x: x)
     filters = resolve(d.get("Filter"))
@@ -814,14 +875,13 @@ class PdfDocument:
 # fonts
 # ---------------------------------------------------------------------------
 
-# WinAnsiEncoding is cp1252; the five cp1252 holes map to nothing.
+# WinAnsiEncoding is cp1252; the five cp1252 holes map to U+FFFD. Built
+# once: every simple font starts from a copy.
 _CP1252_HOLES = {0x81, 0x8D, 0x8F, 0x90, 0x9D}
-
-
-def _winansi_char(code: int) -> str:
-    if code in _CP1252_HOLES:
-        return "�"
-    return bytes([code]).decode("cp1252", errors="replace")
+_WINANSI = tuple(
+    "�" if c in _CP1252_HOLES else bytes([c]).decode("cp1252", errors="replace")
+    for c in range(256)
+)
 
 
 # Minimal Adobe-Glyph-List subset for /Differences (covers the names a
@@ -899,28 +959,60 @@ def _parse_tounicode(data: bytes) -> dict[int, str]:
     return cmap
 
 
+# advance tables kept per font before the cache is dropped: a stream
+# that changes Tf/Tc/Tw/Tz before every show must not grow it unbounded
+_MAX_ADVANCE_TABLES = 64
+
+
+class _Advances(dict):
+    """Byte → advance term of one simple font under one ``(size, Tc,
+    Tw, Th)``, each term computed on first use."""
+
+    def __init__(self, font: "_Font", size: float, char_sp: float, word_sp: float, hscale: float) -> None:
+        super().__init__()
+        self.args = (font, size, char_sp, word_sp, hscale)
+
+    def __missing__(self, b: int) -> float:
+        font, size, char_sp, word_sp, hscale = self.args
+        w = font.widths.get(b, font.default_width)
+        term = self[b] = (w / 1000.0 * size + char_sp + (word_sp if font.simple_map[b] == " " else 0.0)) * hscale
+        return term
+
+
 @dataclass
 class _Font:
-    """Decoded font: maps show-string bytes → (chars, advances/1000)."""
+    """Decoded font: maps show-string bytes → (text, pen advance)."""
 
     type0: bool = False
     cmap: dict[int, str] = field(default_factory=dict)  # for type0
     simple_map: list[str] = field(default_factory=list)  # 256 entries
     widths: dict[int, float] = field(default_factory=dict)
     default_width: float = 500.0
+    # simple fonts, built on first show (the fields above are final by then)
+    _translate: tuple[str, ...] | None = field(default=None, init=False, repr=False)
+    _advances: dict[tuple, _Advances] = field(default_factory=dict, init=False, repr=False)
 
-    def decode(self, raw: bytes) -> list[tuple[str, float]]:
-        out: list[tuple[str, float]] = []
+    def text_advance(
+        self, raw: bytes, size: float, char_sp: float, word_sp: float, hscale: float
+    ) -> tuple[str, float]:
+        """The text ``raw`` shows and its pen advance in text space: the
+        per-glyph terms ``(w / 1000 × size + Tc [+ Tw on a decoded
+        space, simple fonts]) × Th`` folded left to right from 0.0."""
         if self.type0:
-            for k in range(0, len(raw) - 1, 2):
-                code = (raw[k] << 8) | raw[k + 1]
-                out.append(
-                    (self.cmap.get(code, "�"), self.widths.get(code, self.default_width))
-                )
-        else:
-            for b in raw:
-                out.append((self.simple_map[b], self.widths.get(b, self.default_width)))
-        return out
+            codes = struct.unpack(f">{len(raw) // 2}H", raw[: len(raw) & ~1])
+            cmap, widths, dw = self.cmap, self.widths, self.default_width
+            text = "".join([cmap.get(c, "�") for c in codes])
+            terms = [(widths.get(c, dw) / 1000.0 * size + char_sp) * hscale for c in codes]
+            return text, reduce(add, terms, 0.0)
+        if self._translate is None:
+            self._translate = tuple(self.simple_map)
+        key = (size, char_sp, word_sp, hscale)
+        table = self._advances.get(key)
+        if table is None:
+            if len(self._advances) >= _MAX_ADVANCE_TABLES:
+                self._advances.clear()
+            table = self._advances[key] = _Advances(self, size, char_sp, word_sp, hscale)
+        return raw.decode("latin-1").translate(self._translate), reduce(add, map(table.__getitem__, raw), 0.0)
 
 
 def _load_font(doc: PdfDocument, fdict: dict) -> _Font:
@@ -953,7 +1045,7 @@ def _load_font(doc: PdfDocument, fdict: dict) -> _Font:
         return font
     # simple font
     enc = doc.resolve(fdict.get("Encoding"))
-    base_map = [_winansi_char(c) for c in range(256)]
+    base_map = list(_WINANSI)
     if isinstance(enc, dict):
         diffs = doc.resolve(enc.get("Differences")) or []
         code = 0
@@ -1049,7 +1141,7 @@ class _TextExtractor:
         if key not in self._font_cache:
             fdict = self.doc.resolve(fref)
             self._font_cache[key] = (
-                _load_font(self.doc, fdict) if isinstance(fdict, dict) else _Font(simple_map=[_winansi_char(c) for c in range(256)])
+                _load_font(self.doc, fdict) if isinstance(fdict, dict) else _Font(simple_map=list(_WINANSI))
             )
         return self._font_cache[key]
 
@@ -1096,11 +1188,7 @@ class _TextExtractor:
             # a glyph is `size` tall in text space (Tf size is not part
             # of Tm); device size = size × |trm y-basis (c, d)|
             dev_size = size * (trm[2] ** 2 + trm[3] ** 2) ** 0.5
-            chars = font.decode(raw)
-            text = "".join(c for c, _w in chars)
-            adv = 0.0
-            for c, w in chars:
-                adv += (w / 1000.0 * size + char_sp + (word_sp if c == " " and not font.type0 else 0.0)) * hscale
+            text, adv = font.text_advance(raw, size, char_sp, word_sp, hscale)
             tm_after = _mat_mul((1, 0, 0, 1, adv, 0), tm)
             trm_after = _mat_mul(tm_after, ctm)
             if text:
@@ -1108,12 +1196,9 @@ class _TextExtractor:
             tm = tm_after
 
         while True:
-            p.skip_ws()
-            if p.pos >= p.n:
-                break
             try:
                 tok = p.parse_object()
-            except ValueError:
+            except ValueError:  # end of stream or a token that cannot parse
                 break
             if not isinstance(tok, str) or isinstance(tok, Name):
                 stack.append(tok)

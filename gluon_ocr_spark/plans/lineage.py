@@ -41,7 +41,11 @@ from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..operators.extract import extract_docs
+from ..operators.extract import DOCS_SCHEMA, extract_docs
+
+# a run's docs directory as ExtractionJob writes it; read with this
+# schema, a directory costs no schema-inference job
+RUN_DOCS_SCHEMA = DOCS_SCHEMA + ", partition_id int"
 
 LINEAGE_SCHEMA = (
     "run_id string, partition_id int, url_count bigint, line_count bigint, "
@@ -103,13 +107,19 @@ class CommitLog:
         rows = log.groupBy(self.key).agg(*[F.sum(c).alias(n) for c, n in self.sums.items()]).collect()
         return {r[self.key]: {n: r[n] for n in self.sums.values()} for r in rows}
 
-    def read(self, spark: SparkSession, table: str, ids: Iterable[str]) -> DataFrame | None:
+    def read(
+        self, spark: SparkSession, table: str, ids: Iterable[str], schema: str | None = None
+    ) -> DataFrame | None:
         """Union of ``table`` over the committed ``ids`` — orphan
         (uncommitted) directories are invisible, like uncommitted
         Iceberg snapshots. A committed id whose directory is gone
-        raises: skipped, it would silently shrink the snapshot."""
+        raises: skipped, it would silently shrink the snapshot.
+        ``schema`` (DDL) skips Spark's schema inference."""
         paths = [self.data_dir(table, i) for i in ids]
-        return spark.read.parquet(*paths) if paths else None
+        if not paths:
+            return None
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*paths)
 
     def run(self, spark: SparkSession, id_: str, write: Callable[[dict], DataFrame]) -> dict:
         """Commit ``id_`` once. ``write(committed)`` gets the committed
@@ -154,7 +164,7 @@ class ExtractionJob:
 
     def read_docs(self, spark: SparkSession) -> DataFrame | None:
         """Union of committed runs only."""
-        return self.commits.read(spark, "docs", self.commits.committed(spark))
+        return self.commits.read(spark, "docs", self.commits.committed(spark), RUN_DOCS_SCHEMA)
 
     def committed_urls(self, spark: SparkSession) -> DataFrame | None:
         docs = self.read_docs(spark)
@@ -172,7 +182,7 @@ class ExtractionJob:
         run_id = run_id or uuid.uuid4().hex[:16]
 
         def write(committed: dict) -> DataFrame:
-            done = self.commits.read(spark, "docs", committed)
+            done = self.commits.read(spark, "docs", committed, RUN_DOCS_SCHEMA)
             todo = pages
             if done is not None:
                 # resume: anti-join against committed urls. url is the
@@ -186,7 +196,7 @@ class ExtractionJob:
             docs.write.mode("overwrite").parquet(run_dir)
             # lineage from data-as-written (audit what actually committed)
             return (
-                spark.read.parquet(run_dir)
+                spark.read.schema(RUN_DOCS_SCHEMA).parquet(run_dir)
                 .groupBy("partition_id")
                 .agg(
                     F.count("*").alias("url_count"),

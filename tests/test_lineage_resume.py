@@ -7,7 +7,7 @@ import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 
-from gluon_ocr_spark.plans.lineage import ExtractionJob
+from gluon_ocr_spark.plans.lineage import RUN_DOCS_SCHEMA, ExtractionJob
 from gluon_ocr_spark.sources.pages import pages_dataframe
 
 N = 40
@@ -139,3 +139,16 @@ def test_resume_through_a_filesystem_uri(spark, tmp_path):
     assert job.committed_run_ids(spark) == ["r1"]
     assert job.run(spark, pages, run_id="r2")["urls_processed"] == 0
     assert job.read_docs(spark).count() == 6
+
+
+def test_declared_docs_schema_matches_a_written_run(spark, tmp_path):
+    """Committed docs are read with ``RUN_DOCS_SCHEMA`` instead of an
+    inferred schema (inference costs a Spark job per read), so the
+    declared schema must be the one a run writes."""
+    job = ExtractionJob(str(tmp_path / "out7"), num_partitions=2)
+    job.run(spark, pages_dataframe(spark, 4, SEED, partitions=2), run_id="r1")
+
+    run_dir = os.path.join(job.docs_dir, "run_id=r1")
+    inferred = spark.read.parquet(run_dir).schema
+    assert spark.read.schema(RUN_DOCS_SCHEMA).parquet(run_dir).schema == inferred
+    assert job.read_docs(spark).schema == inferred
