@@ -114,7 +114,7 @@ def _extract_pdf(payload: bytes) -> ExtractResult | None:
         if "encrypted" in str(e):
             return ExtractResult(text="", lines=[])
         return None  # not actually a PDF document → HTML leg
-    except (TypeError, KeyError, RecursionError, zlib.error):
+    except (TypeError, KeyError, OverflowError, RecursionError, zlib.error):
         return None
     lines: list[Line] = []
     offset = 0

@@ -1297,7 +1297,7 @@ class _TextExtractor:
                     if end == -1:
                         break
                     p.pos = end + 2
-            except (ValueError, TypeError, KeyError):
+            except (ValueError, TypeError, KeyError, OverflowError):
                 pass  # total: one bad operator never kills the page
             stack = []
 
@@ -1464,7 +1464,7 @@ def pdf_text_lines(payload: bytes) -> list[PdfLine]:
     for pno, page in enumerate(doc.pages()):
         try:
             runs = ex.run_page(page)
-        except (ValueError, TypeError, KeyError, zlib.error):
+        except (ValueError, TypeError, KeyError, OverflowError, zlib.error):
             continue  # damaged page: keep the rest of the document
         out.extend(assemble_lines(runs, pno))
     return out
@@ -1475,7 +1475,7 @@ def pdf_extract_text(payload: bytes) -> str:
     lines in reading order (never raises; damaged → '')."""
     try:
         return "\n".join(ln.text for ln in pdf_text_lines(payload))
-    except (ValueError, TypeError, KeyError, zlib.error, RecursionError):
+    except (ValueError, TypeError, KeyError, OverflowError, zlib.error, RecursionError):
         return ""
 
 

@@ -593,7 +593,7 @@ def incremental_dedup(
 
     1. exact vs base  — anti-join batch fingerprints against the
        snapshot fingerprint table (``base_fps``);
-    2. exact in batch — keep the min-id row per fingerprint;
+    2. exact in batch — :func:`drop_exact_dups`;
     3. near vs base   — batch LSH bands join the snapshot band table
        (``base_bands``) on ``(band_id, band_key)``; candidates are
        verified with exact token-set Jaccard against the base text
@@ -603,6 +603,9 @@ def incremental_dedup(
     4. near in batch  — the same tail as :func:`drop_near_dups`
        (bucket pairs → verify → connected components → keep
        component-min) over the survivors.
+
+    Against a statically empty snapshot (``CommitLog.read`` of no
+    ids) stages 1 and 3 fold away: ``drop_near_dups(drop_exact_dups)``.
 
     Scale shape at 10^12 base docs + a daily batch: the base is
     touched only through its two stored artifacts (fingerprints,
@@ -624,25 +627,17 @@ def incremental_dedup(
     and the codes projection under the band table are released once
     connected components has returned (the result then reads only the
     eager e3 checkpoint and the CC checkpoints)."""
-    from pyspark.sql import Window
-
     if base_fps is None or base_bands is None:
         fps_d, bands_d = snapshot_artifacts(base, id_col, text_col)
         base_fps = base_fps if base_fps is not None else fps_d
         base_bands = base_bands if base_bands is not None else bands_d
 
-    fp = F.md5(F.lower(F.col(text_col)))
-    b = batch.withColumn("__fp", fp)
-    e1 = b.join(
-        base_fps.withColumnRenamed("content_fp", "__fp"), "__fp", "left_anti"
+    e1 = batch.join(
+        base_fps.withColumnRenamed("content_fp", "__fp"),
+        F.md5(F.lower(F.col(text_col))) == F.col("__fp"),
+        "left_anti",
     )
-    w = Window.partitionBy("__fp").orderBy(F.col(id_col))
-    e2 = (
-        e1.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__fp")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    e2 = drop_exact_dups(e1, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
     batch_bands = minhash_bands(e2, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
     cand = (
         batch_bands.alias("nb")

@@ -148,7 +148,8 @@ class IncrementalCorpus:
     the artifact read is the whole cost of history), extracts + gates
     the new pages with prepare_corpus' chain, admits survivors via
     the four-stage incremental dedup, and appends docs + artifacts +
-    lineage. Re-running a committed increment_id is a no-op replay
+    lineage — the first increment too, against an empty snapshot.
+    Re-running a committed increment_id is a no-op replay
     (idempotent under foreachBatch-style redelivery)."""
 
     #: commit-log row schema BEFORE the committed_at timestamp is
@@ -161,6 +162,11 @@ class IncrementalCorpus:
             warehouse_dir,
             "increment_id",
             f"{self.LINEAGE_ROW_SCHEMA}, committed_at timestamp",
+            {
+                "docs": "url string, text string, n_lines int, n_chars int, n_tokens int, dup_bigram_frac double",
+                "fps": "content_fp string",
+                "bands": "url string, band_id int, band_key string",
+            },
             {"qualified": "qualified", "admitted": "admitted"},
             part="increment",
         )
@@ -175,8 +181,9 @@ class IncrementalCorpus:
         return list(self.commits.committed(spark))
 
     def read_docs(self, spark: SparkSession) -> DataFrame | None:
-        """Union of committed increments only."""
-        return self.commits.read(spark, "docs", self.commits.committed(spark))
+        """Union of committed increments only; ``None`` before the first."""
+        committed = self.commits.committed(spark)
+        return self.commits.read(spark, "docs", committed) if committed else None
 
     # -- write side ---------------------------------------------------
     def ingest(
@@ -205,21 +212,16 @@ class IncrementalCorpus:
             n_qualified = qualified.count()
 
             base, base_fps, base_bands = (self.commits.read(spark, t, committed) for t in ("docs", "fps", "bands"))
-            if base is None:
-                # first increment: no snapshot — within-batch dedup only
-                admitted = drop_near_dups(drop_exact_dups(qualified, id_col="url", text_col="text"),
-                                          id_col="url", text_col="text", threshold=threshold)
-            else:
-                admitted = incremental_dedup(
-                    qualified, base, id_col="url", text_col="text",
-                    threshold=threshold, base_fps=base_fps, base_bands=base_bands,
-                )
+            admitted = incremental_dedup(
+                qualified, base, id_col="url", text_col="text",
+                threshold=threshold, base_fps=base_fps, base_bands=base_bands,
+            )
 
             # the admitted count rides the docs write (no second action)
             obs = Observation()
             inc_docs_dir = self.commits.data_dir("docs", increment_id)
             admitted.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(inc_docs_dir)
-            written = spark.read.parquet(inc_docs_dir)
+            written = self.commits.read(spark, "docs", [increment_id])
             fps, bands = snapshot_artifacts(written, id_col="url", text_col="text")
             fps.write.mode("overwrite").parquet(self.commits.data_dir("fps", increment_id))
             bands.write.mode("overwrite").parquet(self.commits.data_dir("bands", increment_id))

@@ -12,7 +12,8 @@ commit through it: :class:`ExtractionJob` (key ``run_id``, one log row
 per written partition, table ``docs``) and
 :class:`gluon_ocr_spark.pipeline.IncrementalCorpus` (key
 ``increment_id``, one log row per increment, tables ``docs``/``fps``/
-``bands``):
+``bands``; like Iceberg metadata, the log declares each table's schema
+once, and every read uses it):
 
 * each id writes its data to isolated ``<table>/<part>=<id>/``
   directories (never mutating another id's);
@@ -43,8 +44,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..operators.extract import DOCS_SCHEMA, extract_docs
 
-# a run's docs directory as ExtractionJob writes it; read with this
-# schema, a directory costs no schema-inference job
+# a run's docs directory as ExtractionJob writes it
 RUN_DOCS_SCHEMA = DOCS_SCHEMA + ", partition_id int"
 
 LINEAGE_SCHEMA = (
@@ -68,15 +68,18 @@ class CommitLog:
     ``key`` is the log column naming the committed id and ``part`` the
     directory partition its data goes under (default ``key``);
     ``schema`` is the log's declared schema, ``committed_at timestamp``
-    last; ``sums`` maps each counter column of the log to the name it
-    is reported under. An id's counters are always the sums of its log
-    rows: on replay from the log, on a fresh commit observed on the
-    append itself."""
+    last; ``tables`` maps each data table to its schema (DDL); ``sums``
+    maps each counter column of the log to the name it is reported
+    under. An id's counters are always the sums of its log rows: on
+    replay from the log, on a fresh commit observed on the append
+    itself."""
 
-    def __init__(self, root: str, key: str, schema: str, sums: dict[str, str], part: str | None = None):
+    def __init__(self, root: str, key: str, schema: str, tables: dict[str, str], sums: dict[str, str],
+                 part: str | None = None):
         self.root = root
         self.key = key
         self.schema = schema
+        self.tables = tables
         self.sums = sums
         self.part = part or key
         self.log_dir = os.path.join(root, "_lineage")
@@ -107,19 +110,19 @@ class CommitLog:
         rows = log.groupBy(self.key).agg(*[F.sum(c).alias(n) for c, n in self.sums.items()]).collect()
         return {r[self.key]: {n: r[n] for n in self.sums.values()} for r in rows}
 
-    def read(
-        self, spark: SparkSession, table: str, ids: Iterable[str], schema: str | None = None
-    ) -> DataFrame | None:
-        """Union of ``table`` over the committed ``ids`` — orphan
-        (uncommitted) directories are invisible, like uncommitted
-        Iceberg snapshots. A committed id whose directory is gone
-        raises: skipped, it would silently shrink the snapshot.
-        ``schema`` (DDL) skips Spark's schema inference."""
+    def read(self, spark: SparkSession, table: str, ids: Iterable[str]) -> DataFrame:
+        """Union of ``table`` over the committed ``ids``, read with its
+        declared schema, never inferred — orphan (uncommitted)
+        directories are invisible, like uncommitted Iceberg snapshots.
+        A committed id whose directory is gone raises: skipped, it
+        would silently shrink the snapshot. No ids give a statically
+        empty frame: ``limit(0)`` makes it an empty ``LocalRelation``
+        (a bare ``createDataFrame`` is a ``LogicalRDD`` the optimizer
+        never prunes), so a join against it folds away."""
         paths = [self.data_dir(table, i) for i in ids]
         if not paths:
-            return None
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(*paths)
+            return spark.createDataFrame([], self.tables[table]).limit(0)
+        return spark.read.schema(self.tables[table]).parquet(*paths)
 
     def run(self, spark: SparkSession, id_: str, write: Callable[[dict], DataFrame]) -> dict:
         """Commit ``id_`` once. ``write(committed)`` gets the committed
@@ -150,7 +153,8 @@ class ExtractionJob:
         self.out_dir = out_dir
         self.num_partitions = num_partitions
         self.commits = CommitLog(
-            out_dir, "run_id", LINEAGE_SCHEMA, {"url_count": "urls_processed", "line_count": "lines"}
+            out_dir, "run_id", LINEAGE_SCHEMA, {"docs": RUN_DOCS_SCHEMA},
+            {"url_count": "urls_processed", "line_count": "lines"},
         )
         self.docs_dir = self.commits.table_dir("docs")
         self.lineage_dir = self.commits.log_dir
@@ -163,8 +167,9 @@ class ExtractionJob:
         return list(self.commits.committed(spark))
 
     def read_docs(self, spark: SparkSession) -> DataFrame | None:
-        """Union of committed runs only."""
-        return self.commits.read(spark, "docs", self.commits.committed(spark), RUN_DOCS_SCHEMA)
+        """Union of committed runs only; ``None`` before the first."""
+        committed = self.commits.committed(spark)
+        return self.commits.read(spark, "docs", committed) if committed else None
 
     def committed_urls(self, spark: SparkSession) -> DataFrame | None:
         docs = self.read_docs(spark)
@@ -182,21 +187,18 @@ class ExtractionJob:
         run_id = run_id or uuid.uuid4().hex[:16]
 
         def write(committed: dict) -> DataFrame:
-            done = self.commits.read(spark, "docs", committed, RUN_DOCS_SCHEMA)
-            todo = pages
-            if done is not None:
-                # resume: anti-join against committed urls. url is the
-                # identity key (input_hint); both sides shuffle on it
-                # and AQE handles skew.
-                todo = pages.join(done.select("url"), "url", "left_anti")
+            # resume: anti-join against committed urls (none: the join
+            # folds away). url is the identity key (input_hint); both
+            # sides shuffle on it and AQE handles skew.
+            done = self.commits.read(spark, "docs", committed)
+            todo = pages.join(done.select("url"), "url", "left_anti")
             docs = extract_docs(todo, num_partitions=self.num_partitions).withColumn(
                 "partition_id", F.spark_partition_id()
             )
-            run_dir = self.commits.data_dir("docs", run_id)
-            docs.write.mode("overwrite").parquet(run_dir)
+            docs.write.mode("overwrite").parquet(self.commits.data_dir("docs", run_id))
             # lineage from data-as-written (audit what actually committed)
             return (
-                spark.read.schema(RUN_DOCS_SCHEMA).parquet(run_dir)
+                self.commits.read(spark, "docs", [run_id])
                 .groupBy("partition_id")
                 .agg(
                     F.count("*").alias("url_count"),

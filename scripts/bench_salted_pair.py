@@ -3,7 +3,8 @@
 In the full bench the salted hi-core leg always runs LAST of four
 extraction subprocesses — deepest into this host's throttle drain —
 which systematically deflates the salted pair (measured in isolation,
-salted == unsalted at 16 cores: 6.29 s each, scripts/profile_salted.py).
+salted == unsalted at 16 cores: 6.29 s each, by the since-deleted
+scripts/profile_salted.py, whose split ``perfbench --trace 1`` reports).
 This runs ONLY the salted pair, ABBA order (lo, hi, hi, lo), best per
 level, each leg a fresh subprocess with its own hw bracket, and writes
 BENCH/run_r5_salted.json.

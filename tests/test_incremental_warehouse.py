@@ -179,3 +179,50 @@ def test_incremental_ingest_releases_its_dedup_frames(spark, tmp_path):
         sizes.append(cache.cachedData().size())
     growth = [b - a for a, b in zip(sizes, sizes[1:])]
     assert max(growth) == 0, sizes
+
+
+def test_declared_table_schemas_match_a_written_increment(spark, tmp_path):
+    """Committed tables are read with the schemas the commit log
+    declares, never inferred (inference costs a Spark job per read), so
+    each declared schema must be the one an increment writes."""
+    wh = IncrementalCorpus(str(tmp_path / "wh_schema"))
+    wh.ingest(spark, _pages(spark, [("page://a", DOC_A), ("page://b", DOC_B)]), "inc1")
+
+    assert set(wh.commits.tables) == {"docs", "fps", "bands"}
+    for table, ddl in wh.commits.tables.items():
+        inc_dir = os.path.join(wh.warehouse_dir, table, "increment=inc1")
+        inferred = spark.read.parquet(inc_dir).schema
+        assert spark.read.schema(ddl).parquet(inc_dir).schema == inferred, table
+        assert wh.commits.read(spark, table, ["inc1"]).schema == inferred, table
+
+
+def test_first_increment_admits_the_within_batch_dedup(spark, tmp_path):
+    """The first increment goes through the incremental path against an
+    empty snapshot, which must admit what the within-batch chain keeps:
+    exact dedup (case-folded) then near dedup over the gated docs."""
+    from gluon_ocr_spark.operators.dedup import drop_exact_dups, drop_near_dups
+    from gluon_ocr_spark.operators.extract import extract_docs
+    from gluon_ocr_spark.operators.textstats import quality_gate
+
+    pages = _pages(
+        spark,
+        [
+            ("page://a", DOC_A),
+            ("page://a-upper", DOC_A.upper()),  # case copy
+            ("page://b", DOC_B),
+            ("page://b-near", DOC_B.rsplit(" ", 1)[0] + " here"),  # one token changed
+            ("page://c", BOILER),
+            ("page://short", "too short to pass"),  # below the token gate
+        ],
+    )
+    chain = drop_near_dups(
+        drop_exact_dups(quality_gate(extract_docs(pages)), id_col="url", text_col="text"),
+        id_col="url", text_col="text",
+    )
+    want = {r["url"] for r in chain.select("url").collect()}
+    assert want == {"page://a", "page://b", "page://c"}
+
+    wh = IncrementalCorpus(str(tmp_path / "wh_first"))
+    r = wh.ingest(spark, pages, "inc1")
+    assert (r["qualified"], r["admitted"]) == (5, 3)
+    assert {r2["url"] for r2 in wh.read_docs(spark).select("url").collect()} == want

@@ -424,6 +424,28 @@ def test_truncation_never_raises():
         pdf_extract_text(base[:cut])
 
 
+def test_operand_too_large_for_a_float_loses_only_its_operator(spark):
+    """A ``Tf`` size of 400 digits overflows ``float()``: the operator
+    is lost like any malformed one, the next page still reads, and an
+    ``extract_docs`` run over the page finishes instead of failing its
+    Spark task."""
+    from gluon_ocr_spark.kernels.extract import extract_document
+    from gluon_ocr_spark.operators.extract import extract_docs
+
+    base = encode_pdf([[(72, 700, 12, "first page")], [(72, 700, 12, "second page")]], compress=False)
+    first = b"BT\n/F1 12 Tf\n72 700 Td\n(first page) Tj\nET"
+    huge = first.replace(b" 12 Tf", b" " + b"9" * 400 + b" Tf")
+    payload = base.replace(
+        b"/Length %d >>\nstream\n%s" % (len(first), first), b"/Length %d >>\nstream\n%s" % (len(huge), huge)
+    )
+    assert payload != base
+
+    assert pdf_extract_text(payload) == "second page"
+    assert extract_document(payload).text == "second page"
+    pages = spark.createDataFrame([("page://huge-tf", bytearray(payload))], "url string, html binary")
+    assert [r["text"] for r in extract_docs(pages).collect()] == ["second page"]
+
+
 # ---------------------------------------------------------------------------
 # extraction-pipeline integration (the payload sniff)
 # ---------------------------------------------------------------------------

@@ -7,6 +7,7 @@ import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 
+from gluon_ocr_spark.plans import lineage
 from gluon_ocr_spark.plans.lineage import RUN_DOCS_SCHEMA, ExtractionJob
 from gluon_ocr_spark.sources.pages import pages_dataframe
 
@@ -152,3 +153,31 @@ def test_declared_docs_schema_matches_a_written_run(spark, tmp_path):
     inferred = spark.read.parquet(run_dir).schema
     assert spark.read.schema(RUN_DOCS_SCHEMA).parquet(run_dir).schema == inferred
     assert job.read_docs(spark).schema == inferred
+
+
+class _StopRun(Exception):
+    pass
+
+
+def test_no_commits_read_as_a_statically_empty_frame(spark, tmp_path, monkeypatch):
+    """With no committed ids ``CommitLog.read`` gives an empty
+    ``LocalRelation`` in the optimized plan, so a fresh run's resume
+    anti-join folds to the pages alone. An empty ``createDataFrame``
+    without ``limit(0)`` is a ``LogicalRDD`` the optimizer never
+    prunes, and the join would stay."""
+    job = ExtractionJob(str(tmp_path / "out9"), num_partitions=2)
+    empty = job.commits.read(spark, "docs", [])
+    assert str(empty._jdf.queryExecution().optimizedPlan()).startswith("LocalRelation <empty>")
+    assert empty.schema == spark.createDataFrame([], RUN_DOCS_SCHEMA).schema
+
+    seen = []
+
+    def stop(todo, **_kw):
+        seen.append(todo)
+        raise _StopRun
+
+    monkeypatch.setattr(lineage, "extract_docs", stop)
+    with pytest.raises(_StopRun):
+        job.run(spark, pages_dataframe(spark, 4, SEED, partitions=2), run_id="r1")
+    plan = str(seen[0]._jdf.queryExecution().optimizedPlan())
+    assert "Join" not in plan and "LogicalRDD" not in plan, plan
